@@ -666,7 +666,7 @@ object Dedup {
           // files exist — sweep them so the loop holds at most two
           // label generations on disk
           if (round > 0)
-            graft.operators.Migrate.deleteTree(s"$dir/l${round - 1}")
+            graft.operators.Migrate.deleteTreeQuietly(s"$dir/l${round - 1}")
           sess.read.schema("doc_id BIGINT, label BIGINT")
             .parquet(s"$dir/l$round")
         case None => df.localCheckpoint(false)

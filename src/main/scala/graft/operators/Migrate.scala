@@ -182,46 +182,90 @@ object Migrate {
   private val tempDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
+  private lazy val logger =
+    org.slf4j.LoggerFactory.getLogger("graft.operators.Migrate")
+
   /** Deepest-first recursive delete (directories empty before their
-    * own delete), swallowing every error — the ONE definition shared
-    * by the JVM-exit sweep below and the eager scratch/root deletes
-    * (pipe15 replay dirs, evicted pipe15/pipe16 roots), so a fix to
-    * the walk (symlinks, permissions) reaches every sweep.
+    * own delete) that FAILS LOUD: a delete that did not happen throws,
+    * so the GC callers (pipe20's expiry, pipe21's orphan sweep) never
+    * count a drop that left the tree on disk. An absent tree is a
+    * no-op (an expiry replay re-deletes already-gone dirs). Scratch
+    * cleanups that may stay best-effort use [[deleteTreeQuietly]].
     */
   private[graft] def deleteTree(dir: String): Unit =
     // a scheme-qualified path (hdfs://, mockfs:/ — anything the WAP
-    // manifest can record) must go through the Hadoop FileSystem:
-    // java.nio.Paths.get throws on it, and the catch-all below would
-    // turn an expiry/orphan delete into a silent no-op — tombstoned
-    // versions reporting dirs dropped that still exist
-    if (dir.matches("^[A-Za-z][A-Za-z0-9+.-]*:/.*"))
-      try {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val conf = org.apache.spark.sql.SparkSession.getActiveSession
-          .map(_.sparkContext.hadoopConfiguration)
-          .getOrElse(new org.apache.hadoop.conf.Configuration())
-        p.getFileSystem(conf).delete(p, true); ()
-      } catch { case _: Throwable => () }
-    else
-      try deleteTreePath(java.nio.file.Paths.get(dir))
-      catch { case _: Throwable => () }
+    // version log can record) must go through the Hadoop FileSystem:
+    // java.nio.Paths.get throws on it
+    if (dir.matches("^[A-Za-z][A-Za-z0-9+.-]*:/.*")) {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val conf = org.apache.spark.sql.SparkSession.getActiveSession
+        .map(_.sparkContext.hadoopConfiguration)
+        .getOrElse(new org.apache.hadoop.conf.Configuration())
+      val fs = p.getFileSystem(conf)
+      if (!fs.delete(p, true) && fs.exists(p))
+        throw new java.io.IOException(s"could not delete $dir")
+    }
+    else deleteTreePath(java.nio.file.Paths.get(dir))
 
-  private def deleteTreePath(p: java.nio.file.Path): Unit =
-    try {
-      import java.nio.file.{Files => F}
-      import scala.jdk.CollectionConverters._
-      if (F.exists(p))
-        F.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(f => F.deleteIfExists(f))
-    } catch { case _: Throwable => () }
+  /** [[deleteTree]] for scratch that nothing reads again (the JVM-exit
+    * sweep, `finally` cleanups, evicted memo roots): a failure is
+    * logged, never raised over the caller's own result or error.
+    */
+  private[graft] def deleteTreeQuietly(dir: String): Unit =
+    try deleteTree(dir)
+    catch { case scala.util.control.NonFatal(e) =>
+      logger.warn(s"scratch cleanup of $dir failed: $e") }
+
+  private def deleteTreePath(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files => F}
+    import scala.jdk.CollectionConverters._
+    if (F.exists(p)) {
+      val walk = F.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(f => F.deleteIfExists(f))
+      finally walk.close()
+    }
+  }
 
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach(deleteTreePath)))
+      tempDirs.forEach(p => deleteTreeQuietly(p.toString))))
   }
 
   private[graft] def tempDir(tag: String): String = {
     val p = Files.createTempDirectory(s"graft_$tag")
+    tempDirs.add(p)
+    p.toString
+  }
+
+  /** Per-run scratch for STREAMING checkpoints and stream outputs:
+    * RAM-backed when the host has a writable tmpfs (the
+    * [[scratchDbDir]] rationale applied to the streaming arms —
+    * r17). Profiled with the per-batch progress dump: each
+    * HDFSBackedStateStore commit paid ~40-100 ms of ext4
+    * create+rename per store per micro-batch (32 stores on c11's
+    * 8-wide session = 3-6 s of summed commit time for KB-sized
+    * state), plus offset/commit-log writes on the same axis — pure
+    * checkpoint-FS latency, not data. Durability of a per-run
+    * scratch checkpoint is moot (created fresh, swept on exit;
+    * restartability-from-checkpoint is pinned by specs that build
+    * their OWN checkpoint dirs). A production deployment sizes
+    * checkpoint storage for its durability needs instead —
+    * SPARK_GRAFT_STREAM_SCRATCH overrides the parent dir, and a value
+    * that is not a writable directory fails the run rather than
+    * silently landing the scratch elsewhere.
+    */
+  private[graft] def fastTempDir(tag: String,
+      scratchEnv: Option[String] = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH"))
+      : String = {
+    val p = scratchEnv match {
+      case Some(dir) =>
+        val parent = java.nio.file.Paths.get(dir)
+        require(Files.isDirectory(parent) && Files.isWritable(parent),
+          s"SPARK_GRAFT_STREAM_SCRATCH=$dir is not a writable directory")
+        Files.createTempDirectory(parent, s"graft_$tag")
+      case None => ramTempDir(tag)
+    }
     tempDirs.add(p)
     p.toString
   }
@@ -240,43 +284,30 @@ object Migrate {
     * (default is 4 MiB — thrashes on the MERGE working set) and
     * derby.log kept out of the repo working dir.
     */
-  /** Per-run scratch for STREAMING checkpoints and stream outputs:
-    * RAM-backed when the host has a writable tmpfs (the
-    * [[scratchDbDir]] rationale applied to the streaming arms —
-    * r17). Profiled with the per-batch progress dump: each
-    * HDFSBackedStateStore commit paid ~40-100 ms of ext4
-    * create+rename per store per micro-batch (32 stores on c11's
-    * 8-wide session = 3-6 s of summed commit time for KB-sized
-    * state), plus offset/commit-log writes on the same axis — pure
-    * checkpoint-FS latency, not data. Durability of a per-run
-    * scratch checkpoint is moot (created fresh, swept on exit;
-    * restartability-from-checkpoint is pinned by specs that build
-    * their OWN checkpoint dirs). A production deployment sizes
-    * checkpoint storage for its durability needs instead —
-    * SPARK_GRAFT_STREAM_SCRATCH overrides the parent dir.
-    */
-  private[graft] def fastTempDir(tag: String): String = {
-    val parent = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get("/dev/shm"))
-    val p =
-      if (Files.isDirectory(parent) && Files.isWritable(parent))
-        Files.createTempDirectory(parent, s"graft_$tag")
-      else Files.createTempDirectory(s"graft_$tag")
-    tempDirs.add(p)
-    p.toString
-  }
-
   private[graft] def scratchDbDir(tag: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val p =
-      if (Files.isDirectory(shm) && Files.isWritable(shm))
-        Files.createTempDirectory(shm, s"graft_$tag")
-      else Files.createTempDirectory(s"graft_$tag")
+    val p = ramTempDir(tag)
     tempDirs.add(p)
     derbyTuned
     System.setProperty("derby.system.home", p.toString)
     p.toString
+  }
+
+  /** A temp dir under /dev/shm when the host has a writable tmpfs
+    * there, else under java.io.tmpdir — the fallback is logged once,
+    * so a run believed RAM-backed that is not says so.
+    */
+  private def ramTempDir(tag: String): java.nio.file.Path =
+    shm.fold(Files.createTempDirectory(s"graft_$tag"))(
+      Files.createTempDirectory(_, s"graft_$tag"))
+
+  private lazy val shm: Option[java.nio.file.Path] = {
+    val p = java.nio.file.Paths.get("/dev/shm")
+    if (Files.isDirectory(p) && Files.isWritable(p)) Some(p)
+    else {
+      logger.warn("/dev/shm is not a writable directory — RAM scratch " +
+        "falls back to java.io.tmpdir")
+      None
+    }
   }
 
   /** Applied once, before the first embedded-Derby boot in this JVM

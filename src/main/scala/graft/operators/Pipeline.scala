@@ -519,8 +519,8 @@ object Pipeline {
     * discipline between "the curation job finished" and "training
     * reads the new snapshot": the candidate is STAGED to its own path,
     * audited from the staged FILES (what was actually written, not
-    * what the job meant to write), and only a full-pass audit appends
-    * the manifest row that makes it the published version — readers
+    * what the job meant to write), and only a full-pass audit commits
+    * the log entry that makes it the published version — readers
     * resolve the manifest pointer (s17's mechanism) and never see a
     * failed candidate. Published baseline = the prior snapshot (80%
     * of docs, doc_id % 5 ≠ 4); candidate = the full corpus. The
@@ -535,19 +535,19 @@ object Pipeline {
     val docs = Tables.load(s, d, "documents")
     docs.filter(col("doc_id") % 5 =!= 4)
       .write.mode(SaveMode.Overwrite).parquet(s"$root/data/v1")
-    Seq((1L, s"$root/data/v1")).toDF("version", "path")
-      .write.mode(SaveMode.Append).parquet(s"$root/manifest")
+    val v1 = commit(s, root, WapLog(Nil), "pipe14WapPublish")(
+      _ => Publish(1L, Seq(s"$root/data/v1"), Nil))
     docs.write.mode(SaveMode.Overwrite).parquet(s"$root/stage/v2") // stage
     val audit = wapAudit(
       s.read.parquet(s"$root/data/v1"),
       s.read.parquet(s"$root/stage/v2"))
     val rows = audit.collect()
     val allPass = rows.nonEmpty && rows.forall(_.getAs[Boolean]("pass"))
-    if (allPass) // publish = ONE manifest append; data files move never
-      Seq((2L, s"$root/stage/v2")).toDF("version", "path")
-        .write.mode(SaveMode.Append).parquet(s"$root/manifest")
-    val version = s.read.parquet(s"$root/manifest")
-      .agg(max(col("version"))).head.getLong(0)
+    val published = // publish = ONE log entry; data files move never
+      if (allPass) commit(s, root, v1, "pipe14WapPublish")(
+        _ => Publish(2L, Seq(s"$root/stage/v2"), Nil))
+      else v1
+    val version = published.tip.get
     // return the rows already collected for the gate decision — a
     // lazy `audit` here would re-run both corpus scans (incl. the
     // countDistinct) when the caller evaluates the frame
@@ -634,8 +634,8 @@ object Pipeline {
     * against the published baseline with the SAME gate arithmetic as
     * pipe14 ([[wapGates]], fed by publish-time stats composed with
     * shard-side aggregates — the published corpus is never
-    * rescanned), and only a full pass appends the manifest rows that
-    * make (v1 files + admitted files) the published v2. The report carries the audit,
+    * rescanned), and only a full pass commits the log entry that
+    * makes (v1 files + admitted files) the published v2. The report carries the audit,
     * the admission accounting (admitted vs rejected-duplicate counts
     * — the rows a data-curation runbook asks for first), and the
     * resulting published version, so the hash gate pins dedup, gates,
@@ -649,13 +649,13 @@ object Pipeline {
     * index-vs-shard anti-join, one shard-sized write, and bounded
     * stat composition — the published bytes are neither rewritten
     * nor read. The loop CLOSES the same way ([[admitShard]] with
-    * `closeLoop = true`): a passing publish appends the admitted
+    * `closeLoop = true`): a passing publish adds the admitted
     * fingerprints to the index as a delta shard (d19's incremental
     * band-index pattern), the admitted aggregates to the stats
-    * (additive — every delta's fingerprints are new), and re-stamped
-    * paths to the manifest, so the NEXT shard admits against the new
-    * version with the same metadata-only cost; the spec drives two
-    * consecutive increments through it.
+    * (additive — every delta's fingerprints are new), and names both
+    * beside the re-stamped paths in its entry, so the NEXT shard
+    * admits against the new version with the same metadata-only cost;
+    * the spec drives two consecutive increments through it.
     */
   /** The publish-v1 half, split on a caller-owned root so the spec
     * can snapshot the published files between phases and assert
@@ -673,15 +673,16 @@ object Pipeline {
   private val wapHasText: Column =
     col("text").isNotNull && length(col("text")) > 0
 
-  /** Every at-rest relation is APPEND-ONLY so the loop closes
-    * metadata-only: `index/fp` accumulates one fingerprint DELTA per
-    * publish (v1's distinct set, then each admission's new fps —
-    * d19's incremental band-index pattern), `stats/totals` and
-    * `stats/lang` accumulate one increment's aggregates per publish
-    * (the published side of any later audit is their SUM — additive
-    * because every delta's fingerprints are new by the anti-join and
-    * counts just add), and the manifest re-stamps the prior
-    * version's paths plus the new one.
+  /** Every at-rest relation is a set of DELTAS, each named by the
+    * publish entry that committed it: `fp` (v1's distinct set, then
+    * each admission's new fps — d19's incremental band-index
+    * pattern), `totals` and `lang` (one increment's aggregates per
+    * publish — the published side of any later audit is their SUM,
+    * additive because every delta's fingerprints are new by the
+    * anti-join and counts just add). Admission stages its deltas
+    * under a writer-unique `meta/` dir before it commits, so a losing
+    * or crashed writer's deltas are never named by the log and never
+    * read.
     */
   private[graft] def pipe15PublishV1(s: SparkSession, d: String,
       root: String): Unit =
@@ -690,345 +691,304 @@ object Pipeline {
 
   /** The v1 publish on a caller-chosen base corpus — pipe15/16/18 use
     * the 4/5 slice; pipe19's streaming loop publishes the 3/5 slice
-    * and lets the rest arrive as shards.
+    * and lets the rest arrive as shards. The landing dir is
+    * writer-unique like every staged write: a second first publish
+    * that passed the unpublished guard lands beside the winner's
+    * files, never over them, and loses at the commit.
     */
   private[graft] def publishBaseV1(s: SparkSession, base: DataFrame,
-      root: String): Unit = {
-    // guard BEFORE the landing write: a double publish must be
-    // rejected before any file is touched — data/v1 is referenced by
-    // the live manifest, and Overwrite would tear it for readers
-    // mid-resolve even though publishV1Meta's own guard fires later
-    requireUnpublished(s, root)
-    base.write.mode(SaveMode.Overwrite).parquet(s"$root/data/v1")
-    publishV1Meta(s, s"$root/data/v1", root)
+      root: String, beforeStage: () => Unit = () => ()): Unit = {
+    val empty = requireUnpublished(s, root)
+    beforeStage() // test seam: park a racing first publish here
+    val landing = s"$root/data/v1_${nonce()}"
+    commitOrDiscard(Seq(landing)) {
+      base.write.mode(SaveMode.ErrorIfExists).parquet(landing)
+      commitV1(s, root, empty, landing)
+    }
+  }
+
+  /** Fail-fast double-publish guard: a root is published at most
+    * once (a second v1 would double every stat and fingerprint delta
+    * and poison all subsequent composed audits); increments go through
+    * [[admitShard]]. The commit re-checks it: a racing first publish
+    * that passed this guard loses there. Returns the (empty) log the
+    * first publish commits on.
+    */
+  private def requireUnpublished(s: SparkSession, root: String): WapLog = {
+    val log = readLog(s, root)
+    // no caller name in the message: this guard fires on BOTH publish
+    // paths (publishBaseV1 and pipe19's publishV1Meta)
+    require(log.entries.isEmpty,
+      s"publish v1: $root already holds a manifest — publishing " +
+        "v1 twice would double-count the index and stats deltas; " +
+        "admit increments via admitShard instead")
+    log
   }
 
   /** Publish v1 as a manifest REFERENCE to an already-landed path —
-    * the index/stats/manifest writes without the data copy. The
-    * manifest-pointer model means even the first publish is
+    * the index/stats deltas and the log entry without the data copy.
+    * The manifest-pointer model means even the first publish is
     * metadata-only when the corpus already sits in a read-only
     * landing dir (pipe19's case); [[publishBaseV1]] is this plus the
-    * landing write.
+    * landing write. Only the writer's own meta dir is discarded on a
+    * conflict — never `basePath`, which the caller owns.
     */
-  /** Fail-fast double-publish guard: every at-rest relation in the
-    * v1 publish is APPEND-mode, so a second publish on the same root
-    * would not error — it would silently DOUBLE every stat and
-    * fingerprint delta and poison all subsequent composed audits. A
-    * root is published at most once; increments go through
-    * [[admitShard]].
-    */
-  private def requireUnpublished(s: SparkSession, root: String): Unit = {
-    val mPath = new org.apache.hadoop.fs.Path(s"$root/manifest")
-    // no caller name in the message: this guard fires on BOTH publish
-    // paths (publishBaseV1 and pipe19's publishV1Meta) — a hardcoded
-    // "pipe15PublishV1:" prefix misdiagnosed a streaming-admission
-    // double publish as a pipe15 one
-    require(!mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(mPath),
-      s"publish v1: $root already holds a manifest — publishing " +
-        "v1 twice would double-count the append-only index and stats; " +
-        "admit increments via admitShard instead")
-  }
-
   private[graft] def publishV1Meta(s: SparkSession, basePath: String,
-      root: String): Unit = {
-    requireUnpublished(s, root) // cheap fast-fail before any job runs
+      root: String): Unit =
+    commitV1(s, root, requireUnpublished(s, root), basePath)
+
+  /** Stage v1's index/stats deltas and commit v1 on the `empty` log. */
+  private def commitV1(s: SparkSession, root: String, empty: WapLog,
+      basePath: String): Unit = {
     val published = s.read.parquet(basePath)
-    // The v1 index/stats land INSIDE the locked commit, AFTER the
-    // no-manifest validation: a racing first publish's loser blocks
-    // on the lock, fails the validation, and never touches the
-    // winner's at-rest meta (unlocked, the loser's Overwrite could
-    // clobber the winner's index/stats after the winner committed —
-    // manifest from one writer, meta from the other). This is the
-    // one commit that holds the lock for data-sized work: once per
-    // root, and the alternative (stage + publish-by-reference) would
-    // tax every index/stats reader for a once-per-root event.
-    //
-    // v1 deltas are written OVERWRITE (the rest of the loop appends):
-    // a publish that died between a stats write and the manifest
-    // append released the lock with NO manifest — the retry passes
-    // the validation again and Overwrite makes it idempotent instead
-    // of double-appending the v1 deltas.
-    commitManifest(s, root, Seq((1L, basePath)), expectedTip = None,
-      who = "publishV1Meta", underLock = () => {
-        published.filter(wapHasText).select(wapFp.as("fp"))
-          .distinct().withColumn("version", lit(1L))
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/index/fp")
-        // coalesce the empty-corpus aggregates: sum over zero rows is
-        // NULL, and a NULL stat would silently poison every composed
-        // gate downstream instead of holding on rows_ratio's
-        // 0-denominator
-        published.agg(count(lit(1)).as("n"),
-            coalesce(sum(when(!wapHasText, 1L).otherwise(0L)), lit(0L))
-              .as("nnull"),
-            countDistinct(when(wapHasText, wapFp)).as("nfp"))
-          .withColumn("version", lit(1L))
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/stats/totals")
-        published.groupBy("lang").agg(count(lit(1)).as("c"))
-          .withColumn("version", lit(1L))
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/stats/lang")
-      })
+    val meta = s"$root/meta/v1_${nonce()}"
+    commitOrDiscard(Seq(meta)) {
+      published.filter(wapHasText).select(wapFp.as("fp")).distinct()
+        .write.parquet(s"$meta/fp")
+      // coalesce the empty-corpus aggregates: sum over zero rows is
+      // NULL, and a NULL stat would silently poison every composed
+      // gate downstream instead of holding on rows_ratio's
+      // 0-denominator
+      published.agg(count(lit(1)).as("n"),
+          coalesce(sum(when(!wapHasText, 1L).otherwise(0L)), lit(0L))
+            .as("nnull"),
+          countDistinct(when(wapHasText, wapFp)).as("nfp"))
+        .write.parquet(s"$meta/totals")
+      published.groupBy("lang").agg(count(lit(1)).as("c"))
+        .write.parquet(s"$meta/lang")
+      commit(s, root, empty, "publish v1")(
+        _ => Publish(1L, Seq(basePath), Seq(meta)))
+    }
   }
 
-  /** Serialized, validated manifest append — the WAP loop's COMMIT
-    * point. Writers are optimistic: all staging work (landing
-    * writes, compaction rewrites, audit passes) runs against the tip
-    * each writer observed with no coordination; the commit
-    * re-validates UNDER A LOCK that the tip has not moved since, so
-    * of two writers racing to publish the same next version exactly
-    * one appends and the loser gets a commit-conflict error with its
-    * staged files unreferenced by the manifest (Iceberg's
-    * commit-conflict semantics re-expressed on a file manifest — the
-    * production failure mode a compaction racing a streaming
-    * admission hits). The lock is an atomic exclusive file create,
-    * DERIVED FROM THE SAME FILESYSTEM AS THE MANIFEST: a schemeless
-    * or file:// root uses java.nio O_EXCL (truly atomic on POSIX);
-    * any other scheme goes through the Hadoop
-    * `FileSystem.create(path, overwrite = false)` so an hdfs:// root
-    * keeps real mutual exclusion instead of silently creating a
-    * driver-local lock file (an object-store deployment swaps this
-    * one seam for the catalog's compare-and-swap). A holder that
-    * crashed between create and its finally leaves a lock whose
-    * mtime stops advancing — waiters BREAK a lock older than
-    * [[LockStaleMs]] instead of timing out forever on a dead root.
-    * The lock is held only for the bounded validate + append (plus
-    * `underLock`, the first publish's once-per-root meta writes),
-    * never for staging work.
-    */
-  /** `expectedTip = None` is the FIRST publish: the commit validates
-    * that no manifest exists yet (closing the check-then-act window
-    * in [[requireUnpublished]] — two racing v1 publishes would both
-    * pass the unlocked guard, and the append-only relations would
-    * silently double).
-    */
-  /** A commit lock whose mtime is older than this is a crashed
-    * holder — waiters break it. A LIVE holder's lock never goes
-    * stale regardless of how long its commit runs (the first
-    * publish's meta writes are data-sized): a daemon heartbeat
-    * refreshes the lock mtime every [[LockHeartbeatMs]] while held,
-    * so mtime silence past this threshold really does mean the
-    * holder's JVM is gone.
-    */
-  private[graft] val LockStaleMs: Long = 10L * 60 * 1000
-  private[graft] val LockHeartbeatMs: Long = 30L * 1000
+  private def nonce(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
-  /** How long an acquirer waits before giving up. Sized WELL past
-    * [[LockStaleMs]], never in seconds: a LIVE holder may
-    * legitimately hold for a data-sized `underLock` write (the first
-    * publish's index/stats), and a short deadline would fail every
-    * conflict-FREE commit that merely arrived during one — admitShard
-    * would then delete its fully-staged shard over a non-conflict. A
-    * CRASHED holder is broken at LockStaleMs, so 2× bounds the wait
-    * through one dead holder plus one full live hold.
-    */
-  private[graft] val LockWaitMs: Long = 2 * LockStaleMs
+  // ------------------------------------------------ the version log
 
-  private lazy val lockLog =
+  /** One immutable entry of a root's version log,
+    * `$root/manifest/_log/`. Entry `k` is the file named `k`
+    * (zero-padded, dense from 1); creating it is the commit.
+    */
+  private[graft] sealed trait LogEntry
+
+  /** Publish `version` (1, 2, 3, … — one per publish): the data dirs
+    * that resolve it (re-stamped prior dirs plus the writer's own)
+    * and the meta dirs whose index/stats deltas it adds.
+    */
+  private[graft] final case class Publish(version: Long,
+      data: Seq[String], meta: Seq[String]) extends LogEntry
+
+  /** Tombstone `versions` — the root's full, monotone expired set —
+    * under retention `keepLast`, the root's policy until the next
+    * expire entry. Carries a sequence number but no version: a vacuum
+    * never moves the tip.
+    */
+  private[graft] final case class Expire(versions: Set[Long],
+      keepLast: Int) extends LogEntry
+
+  /** A root's log as read at one instant; `lastSeq` is the sequence
+    * number a writer observed, and it commits at `lastSeq + 1`.
+    */
+  private[graft] final case class WapLog(entries: Seq[LogEntry]) {
+    def lastSeq: Long = entries.size.toLong
+    def publishes: Seq[Publish] = entries.collect { case p: Publish => p }
+    def versions: Seq[Long] = publishes.map(_.version)
+    def tip: Option[Long] = versions.lastOption
+    def paths(v: Long): Seq[String] = publishes.find(_.version == v)
+      .map(_.data.distinct.sorted).getOrElse(Nil)
+    /** `rel`'s delta dirs as of `version` — every publish up to it. */
+    def meta(version: Long, rel: String): Seq[String] =
+      publishes.filter(_.version <= version).flatMap(_.meta)
+        .map(m => s"$m/$rel")
+    def expired: Set[Long] =
+      entries.collect { case e: Expire => e.versions }.flatten.toSet
+    def keepLast: Option[Int] =
+      entries.collect { case e: Expire => e.keepLast }.lastOption
+    def toDF(s: SparkSession): DataFrame = {
+      import s.implicits._
+      publishes.flatMap(p => p.data.map(p.version -> _))
+        .toDF("version", "path")
+    }
+  }
+
+  private def logDir(root: String) =
+    new org.apache.hadoop.fs.Path(s"$root/manifest/_log")
+
+  private val EntryName = "\\d{20}".r
+
+  private def render(e: LogEntry): String = {
+    val fields = e match {
+      case Publish(v, data, meta) =>
+        ("publish" +: s"version\t$v" +: data.map("data\t" + _)) ++
+          meta.map("meta\t" + _)
+      case Expire(vs, keepLast) =>
+        "expire" +: s"keepLast\t$keepLast" +:
+          vs.toSeq.sorted.map("expired\t" + _)
+    }
+    require(fields.forall(!_.contains('\n')),
+      s"a version log entry cannot record a path holding a newline: $e")
+    (fields :+ "end").mkString("", "\n", "\n")
+  }
+
+  /** Parse one entry; the trailing `end` line proves it complete. */
+  private[graft] def parseEntry(name: String, text: String): LogEntry = {
+    val lines = text.split('\n').toSeq
+    if (lines.size < 2 || lines.last != "end")
+      throw new IllegalStateException(s"version log entry $name is incomplete")
+    val fields = lines.slice(1, lines.size - 1).map(_.split("\t", 2))
+      .map { case Array(k, v) => k -> v
+        case f => throw new IllegalStateException(
+          s"version log entry $name has a malformed line: ${f.mkString}") }
+    def all(k: String) = fields.collect { case (`k`, v) => v }
+    def one(k: String) = all(k) match {
+      case Seq(v) => v
+      case vs => throw new IllegalStateException(
+        s"version log entry $name holds ${vs.size} '$k' fields")
+    }
+    lines.head match {
+      case "publish" =>
+        Publish(one("version").toLong, all("data"), all("meta"))
+      case "expire" =>
+        Expire(all("expired").map(_.toLong).toSet, one("keepLast").toInt)
+      case k => throw new IllegalStateException(
+        s"version log entry $name has unknown kind '$k'")
+    }
+  }
+
+  /** THE log reader: every entry of `root`'s log, in sequence order.
+    * One listing plus one small read per entry — never a Spark job.
+    * Temp names (a writer mid-publish) are skipped; a gap in the
+    * sequence is corruption and fails loud.
+    */
+  private[graft] def readLog(s: SparkSession, root: String): WapLog = {
+    val dir = logDir(root)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val names =
+      try fs.listStatus(dir).map(_.getPath.getName)
+        .filter(EntryName.matches).sorted.toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    require(names.zipWithIndex.forall { case (n, i) => n.toLong == i + 1 },
+      s"version log of $root is not dense: ${names.mkString(",")}")
+    WapLog(names.map { n =>
+      val in = fs.open(new org.apache.hadoop.fs.Path(dir, n))
+      try parseEntry(n, new String(in.readAllBytes(), "UTF-8"))
+      finally in.close()
+    })
+  }
+
+  /** Create entry `seq` holding `e` — true if this writer's create
+    * made it, false if another writer's entry already holds the name.
+    * The entry is written in full under a writer-unique temp name and
+    * then published under its sequence name by an operation that
+    * fails on an existing name, so no reader ever sees it half-written.
+    * The branch keys on the RESOLVED FileSystem: a schemeless root
+    * follows `fs.defaultFS`, so on a cluster whose default FS is HDFS
+    * the log lives there, not on the driver's disk.
+    *  - Local FS: `Files.createLink` — link(2) fails atomically with
+    *    EEXIST.
+    *  - Any other scheme: `FileSystem.rename`, which HDFS refuses onto
+    *    an existing destination. An object store's rename is a copy
+    *    that overwrites; there this one function becomes the store's
+    *    conditional put (create-if-absent), and nothing else changes.
+    */
+  private def createEntry(s: SparkSession, root: String, seq: Long,
+      e: LogEntry): Boolean = {
+    import org.apache.hadoop.fs.Path
+    val dir = logDir(root)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dir)
+    val tmp = new Path(dir, s".tmp.${nonce()}")
+    val dst = new Path(dir, f"$seq%020d")
+    val bytes = render(e).getBytes("UTF-8")
+    if (fs.getUri.getScheme == "file") {
+      def local(p: Path) =
+        java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
+      java.nio.file.Files.write(local(tmp), bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      try { java.nio.file.Files.createLink(local(dst), local(tmp)); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.deleteIfExists(local(tmp))
+    } else {
+      val out = fs.create(tmp, false)
+      try out.write(bytes) finally out.close()
+      val created =
+        try fs.rename(tmp, dst)
+        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+          false }
+      if (!created) {
+        fs.delete(tmp, false)
+        if (!fs.exists(dst)) throw new java.io.IOException(
+          s"could not publish version log entry $dst")
+      }
+      created
+    }
+  }
+
+  private lazy val logger =
     org.slf4j.LoggerFactory.getLogger("graft.operators.Pipeline")
 
-  /** Run `body` holding the root's commit lock — the mutual
-    * exclusion shared by every manifest COMMIT ([[commitManifest]])
-    * and by [[expireVersions]]'s decide+tombstone critical section
-    * (a vacuum that ran unserialized could expire a version a parked
-    * rollback was about to re-stamp; under the shared lock the
-    * rollback's own locked re-check sees the tombstone).
-    *
-    * The local-vs-remote branch keys on the RESOLVED FileSystem, not
-    * on the raw URI scheme: a SCHEMELESS root follows
-    * `fs.defaultFS` for every Spark/Hadoop read and write, so on a
-    * cluster with `defaultFS=hdfs://` the manifest lives on HDFS —
-    * a driver-local java.nio lock there would be no mutual exclusion
-    * between drivers at all, and its heartbeat/release would no-op
-    * against the real path.
+  /** THE commit: publish `entryFor(observed)` as entry
+    * `observed.lastSeq + 1` and return the log it extends. A publish
+    * must name the version after the observed tip. When another
+    * writer's entry already holds the name, the entries after the
+    * observed one decide:
+    *  - a publish entry is a conflict — "commit conflict", and the
+    *    caller discards its staged dirs and re-stages;
+    *  - an expire entry is a conflict only for a publish that
+    *    re-stamps a version it expired (`restamps`, a rollback's
+    *    target); otherwise the commit retries at the next number;
+    *  - an expire entry's own commit re-decides from the newer log
+    *    (`entryFor` runs again) and retries.
     */
-  private[graft] def withCommitLock[T](s: SparkSession, root: String,
-      who: String)(body: => T): T = {
-    val lockHPath =
-      new org.apache.hadoop.fs.Path(s"$root/manifest.commit.lock")
-    val fs = lockHPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val isLocalFs =
-      fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-        fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    // the holder's identity, written INTO the lock file: release
-    // deletes the lock only if it still carries this token, so a
-    // holder that was (correctly or incorrectly) stale-broken can
-    // never blind-delete its SUCCESSOR's fresh lock on the way out —
-    // the residual two-holder re-opening a review found in the
-    // heartbeat-refresh-unsupported scenario. The atomic operation
-    // is still the CREATE; the token lands before the acquirer
-    // proceeds, and a breaker that reads a mid-write empty token
-    // only ever errs toward NOT deleting.
-    val ownerToken = java.util.UUID.randomUUID().toString
-    def tryCreate(p: org.apache.hadoop.fs.Path): Boolean =
-      if (isLocalFs)
-        // local root: java.nio O_EXCL — atomic where Hadoop's local
-        // create(overwrite=false) is only check-then-act
-        try {
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(
-              fs.makeQualified(p).toUri.getPath),
-            ownerToken.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
+  @annotation.tailrec
+  private[graft] def commit(s: SparkSession, root: String,
+      observed: WapLog, who: String, restamps: Set[Long] = Set.empty)(
+      entryFor: WapLog => LogEntry): WapLog = {
+    val e = entryFor(observed)
+    e match {
+      case p: Publish =>
+        val next = observed.tip.getOrElse(0L) + 1
+        require(p.version == next, s"$who: commit conflict — version " +
+          s"${p.version} cannot follow the tip ${next - 1}; re-stage " +
+          "against the current tip")
+        (restamps intersect observed.expired).headOption.foreach { v =>
+          throw new IllegalArgumentException(s"$who: commit conflict — " +
+            s"version $v is expired; its unreferenced files may be " +
+            "vacuumed, so it cannot be re-stamped")
         }
-      else
-        // remote root: the manifest's own FileSystem — atomic on
-        // HDFS; the documented CAS seam on an object store
-        try {
-          val out = fs.create(p, false)
-          try out.write(ownerToken.getBytes("UTF-8"))
-          finally out.close()
-          true
+      case _: Expire => ()
+    }
+    if (createEntry(s, root, observed.lastSeq + 1, e))
+      WapLog(observed.entries :+ e)
+    else {
+      val now = readLog(s, root)
+      val newer = now.entries.drop(observed.entries.size)
+      logger.info(s"$who: entry ${observed.lastSeq + 1} of $root was " +
+        s"taken; ${newer.size} newer entries")
+      if (e.isInstanceOf[Publish])
+        newer.collectFirst { case p: Publish => p }.foreach { p =>
+          throw new IllegalArgumentException(s"$who: commit conflict — " +
+            s"another writer published version ${p.version} while this " +
+            "one staged; re-stage against the new tip")
         }
-        catch { case _: java.io.IOException => false }
-    def tryAcquire(): Boolean = tryCreate(lockHPath)
-    def lockOwner(p: org.apache.hadoop.fs.Path): String =
-      try {
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte](64)
-          val n = in.read(buf)
-          new String(buf, 0, math.max(n, 0), "UTF-8")
-        } finally in.close()
-      } catch { case _: java.io.IOException => "" }
-    // Breaking a stale lock is serialized through a BREAKER MUTEX
-    // (manifest.commit.lock.breaking, same atomic CREATE_NEW as the
-    // lock itself), then RENAME-then-delete — never a blind delete.
-    // History: the blind delete let waiter B break + re-acquire
-    // inside waiter A's check-to-delete window (A then deleted B's
-    // FRESH lock — two holders); the r16 rename-then-mtime-recheck
-    // closed THAT, but the 4-waiter race spec caught its residue
-    // under load: breaker C, acting on a stale status observation,
-    // renames away the FRESH lock a successor B just created, and
-    // while C is renaming it back waiter D acquires the briefly-free
-    // path — B and D hold together. Serialized breaking closes the
-    // window structurally: the stale re-check happens INSIDE the
-    // mutex, where no other breaker can delete/rename the lock file,
-    // and an acquirer can only CREATE when the path is absent — so a
-    // lock that re-reads stale under the mutex is necessarily the
-    // dead incarnation, and the rename claims exactly it. No
-    // rename-back branch remains to open the window. A CRASHED
-    // breaker's mutex file is itself reaped past LockStaleMs (a
-    // break is a millisecond metadata op, so 10 minutes of silence
-    // means a dead JVM); a liveness error there only DELAYS breaking
-    // — it can never admit a second holder. Release-by-owner (below)
-    // still bounds the one theft this cannot close: a live holder
-    // whose heartbeat thread died reads stale and is legitimately
-    // broken.
-    val breakerPath = new org.apache.hadoop.fs.Path(
-      s"$root/manifest.commit.lock.breaking")
-    def breakIfStale(): Unit =
-      try {
-        val st = fs.getFileStatus(lockHPath)
-        if (System.currentTimeMillis() - st.getModificationTime >
-            LockStaleMs) {
-          if (tryCreate(breakerPath))
-            try {
-              val st2 = fs.getFileStatus(lockHPath)
-              if (System.currentTimeMillis() - st2.getModificationTime >
-                  LockStaleMs) {
-                val broken = new org.apache.hadoop.fs.Path(
-                  s"$root/manifest.commit.lock.broken." + java.util.UUID
-                    .randomUUID().toString.replace("-", "").take(12))
-                if (fs.rename(lockHPath, broken)) {
-                  fs.delete(broken, false); ()
-                }
-              }
-            } finally { fs.delete(breakerPath, false); () }
-          else
-            try {
-              val bst = fs.getFileStatus(breakerPath)
-              if (System.currentTimeMillis() - bst.getModificationTime >
-                  LockStaleMs) { fs.delete(breakerPath, false); () }
-            } catch { case _: java.io.FileNotFoundException => () }
-        }
-      } catch { case _: java.io.FileNotFoundException => () }
-    val deadline = System.nanoTime() + LockWaitMs * 1000000L
-    var held = false
-    while (!held)
-      if (tryAcquire()) held = true
-      else {
-        breakIfStale()
-        require(System.nanoTime() < deadline,
-          s"$who: timed out waiting for the manifest commit lock")
-        Thread.sleep(10)
-      }
-    // heartbeat: keep the held lock's mtime fresh so a slow-but-live
-    // commit (the first publish's meta writes) is never broken as
-    // stale by a waiter; exits on interrupt. A NonFatal refresh
-    // failure must NOT kill the daemon (an fs whose setTimes is
-    // unsupported — common in object-store connectors — would
-    // otherwise silently downgrade the stale-break safety story to
-    // "any hold past LockStaleMs gets broken"): warn once, keep
-    // trying.
-    val heartbeat = new Thread(() => {
-      var warned = false
-      try while (true) {
-        Thread.sleep(LockHeartbeatMs)
-        try fs.setTimes(lockHPath, System.currentTimeMillis(), -1)
-        catch {
-          // the lock is already gone — release beat this tick; the
-          // interrupt lands next sleep. Not a refresh failure.
-          case _: java.io.FileNotFoundException => ()
-          case scala.util.control.NonFatal(e) =>
-            if (!warned) {
-              warned = true
-              lockLog.warn(s"$who: commit-lock heartbeat refresh " +
-                s"failed (${e.getClass.getSimpleName}: " +
-                s"${e.getMessage}) — a waiter may stale-break this " +
-                s"holder after ${LockStaleMs / 60000} min")
-            }
-        }
-      } catch { case _: InterruptedException => () }
-    })
-    heartbeat.setDaemon(true)
-    heartbeat.start()
-    try body
-    finally {
-      heartbeat.interrupt()
-      // release-by-owner: delete only OUR lock incarnation. If this
-      // holder was stale-broken mid-commit (heartbeat refresh
-      // unsupported and the hold outran LockStaleMs), the file at
-      // the path is a successor's — leave it alone.
-      try {
-        if (lockOwner(lockHPath) == ownerToken) { fs.delete(lockHPath, false); () }
-        else lockLog.warn(s"$who: lock no longer held at release " +
-          "(stale-broken mid-commit?) — leaving the successor's lock")
-      }
-      catch { case _: java.io.IOException => () }
+      commit(s, root, now, who, restamps)(entryFor)
     }
   }
 
-  private[graft] def commitManifest(s: SparkSession, root: String,
-      rows: Seq[(Long, String)], expectedTip: Option[Long],
-      who: String, underLock: () => Unit = () => ()): Unit = {
-    import s.implicits._
-    withCommitLock(s, root, who) {
-      val mPath = new org.apache.hadoop.fs.Path(s"$root/manifest")
-      val exists = mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(mPath)
-      expectedTip match {
-        case None =>
-          require(!exists,
-            s"$who: commit conflict — another writer published this " +
-              "root's first manifest version while this one staged")
-        case Some(expected) =>
-          require(exists, s"$who: $root has no published manifest")
-          val tip = s.read.parquet(s"$root/manifest")
-            .agg(max(col("version"))).head.getLong(0)
-          require(tip == expected,
-            s"$who: commit conflict — the manifest tip moved from " +
-              s"$expected to $tip while this writer staged (another " +
-              "writer published); re-stage against the new tip")
+  /** Run a writer's staging + commit; if it fails, delete the dirs the
+    * writer staged (writer-unique names, so never a published dir) and
+    * rethrow the original error, a failed delete suppressed into it.
+    */
+  private def commitOrDiscard[T](staged: Seq[String])(body: => T): T =
+    try body
+    catch { case e: Throwable =>
+      staged.foreach { d =>
+        try Migrate.deleteTree(d)
+        catch { case scala.util.control.NonFatal(x) => e.addSuppressed(x) }
       }
-      underLock() // first publish's meta writes — see publishV1Meta
-      rows.toDF("version", "path")
-        .write.mode(SaveMode.Append).parquet(s"$root/manifest")
+      throw e
     }
-  }
 
   /** Admit ONE arriving shard against an already-published root.
     * Touches ONLY (fingerprint index, publish-time stats, the
@@ -1045,22 +1005,23 @@ object Pipeline {
     * admission with the published data files REMOVED.
     *
     * `closeLoop = true` is the production mode: a passing publish
-    * ALSO appends the admitted fingerprints to the index (a delta
-    * shard), the admitted aggregates to the stats, and the
-    * re-stamped paths to the manifest — so the NEXT shard admits
-    * against the new version, still metadata-only (the spec drives
-    * two increments through this). The registered query replays the
-    * FIRST increment with `closeLoop = false` and the base version
-    * pinned, because the bench re-samples queries and a feedback
-    * append would make the second sample admit against its own
-    * output; the report rows are identical either way (the deltas
-    * are written after the audit is collected).
+    * ALSO stages the admitted fingerprints (an index delta) and the
+    * admitted aggregates (stats deltas) under a writer-unique meta
+    * dir, and its publish entry names them beside the re-stamped
+    * paths — so the NEXT shard admits against the new version, still
+    * metadata-only (the spec drives two increments through this), and
+    * a crash before the commit leaves deltas no reader resolves. The
+    * registered query replays the FIRST increment with `closeLoop =
+    * false` and the base version pinned, because the bench re-samples
+    * queries and a feedback delta would make the second sample admit
+    * against its own output; the report rows are identical either way
+    * (the deltas are staged after the audit is collected).
     *
     * `atVersion` pinning is real, not just replay detection: every
-    * index/stats delta is stamped with the version that published it
-    * and every read here filters `version <= prevV`, so admitting
-    * pinned-to-v on a root whose loop has since closed past v still
-    * composes against exactly v's at-rest state.
+    * index/stats delta is named by the publish entry that committed
+    * it and every read here resolves the entries with `version <=
+    * prevV`, so admitting pinned-to-v on a root whose loop has since
+    * closed past v still composes against exactly v's at-rest state.
     */
   private[graft] def admitShard(s: SparkSession, shard: DataFrame,
       root: String, closeLoop: Boolean,
@@ -1069,13 +1030,12 @@ object Pipeline {
       beforeStage: () => Unit = () => ()): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    // ONE bounded manifest read serves both the tip lookup here and
-    // the prior-path re-stamp at publish time (it was two)
-    val manifestRows = s.read.parquet(s"$root/manifest")
-      .select("version", "path").collect()
-    require(manifestRows.nonEmpty,
+    // ONE log read serves the tip lookup, the at-rest delta dirs, the
+    // prior-path re-stamp and the commit's observed entry
+    val log = readLog(s, root)
+    require(log.tip.nonEmpty,
       s"admitShard: $root has no published manifest to admit against")
-    val publishedMax = manifestRows.map(_.getLong(0)).max
+    val publishedMax = log.tip.get
     val prevV = atVersion.getOrElse(publishedMax)
     // pinning PAST the tip would read the full at-rest state (the
     // filters below pass everything) but re-stamp prior paths from a
@@ -1084,14 +1044,12 @@ object Pipeline {
     require(prevV <= publishedMax,
       s"admitShard: atVersion=$prevV is not published (tip is " +
         s"$publishedMax) — a base version must exist to admit against")
-    // every at-rest delta is stamped with the version that published
-    // it, and ALL reads below filter `version <= prevV` — so pinning
-    // `atVersion` is REAL: admitting against version v composes
-    // against exactly the index/stats deltas that existed when v was
-    // published, even on a root whose loop has since closed past it
-    val idx = s.read.schema("fp STRING, version BIGINT")
-      .parquet(s"$root/index/fp")
-      .filter(col("version") <= prevV).select("fp")
+    // ALL at-rest reads below resolve the deltas of the publishes up
+    // to prevV — so pinning `atVersion` is REAL: admitting against
+    // version v composes against exactly the index/stats deltas that
+    // existed when v was published, even on a root whose loop has
+    // since closed past it
+    val idx = s.read.schema("fp STRING").parquet(log.meta(prevV, "fp"): _*)
     val keptText = shard.filter(wapHasText).withColumn("fp", wapFp)
       .join(idx, Seq("fp"), "left_anti")
       .withColumn("rn",
@@ -1105,24 +1063,22 @@ object Pipeline {
     // loser's SaveMode.Overwrite could run AFTER the winner's commit
     // and delete-and-rewrite the winner's PUBLISHED files with a
     // different shard's rows before its own commit fails (silent
-    // corruption the manifest never records). The manifest records
-    // the ACTUAL path at commit time, so no reader ever depends on
+    // corruption the log never records). The log records the
+    // ACTUAL path at commit time, so no reader ever depends on
     // the name; the loser's staged dir is provably its own and is
     // deleted on conflict.
-    val nonce =
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val stagePath = s"$root/stage/v${nextV}_admitted_$nonce"
+    val stageNonce = nonce()
+    val stagePath = s"$root/stage/v${nextV}_admitted_$stageNonce"
     // A pinned-version REPLAY whose target version is already
     // published must not touch it: rewriting a published staging dir
-    // after the manifest published it would tear the snapshot for a
-    // reader resolving it mid-rewrite, and re-appending its manifest
-    // rows would grow the manifest per replay. The replay still
-    // performs the FULL staging write (it is part of the per-shard
-    // cost the bench measures) — to a scratch path the manifest
-    // never references; only the publish appends are skipped.
+    // after the log published it would tear the snapshot for a
+    // reader resolving it mid-rewrite. The replay still performs the
+    // FULL staging write (it is part of the per-shard cost the bench
+    // measures) — to a scratch path the log never names; only the
+    // publish is skipped.
     val isReplay = atVersion.isDefined && publishedMax >= nextV
     val writePath =
-      if (isReplay) s"$root/stage/v${nextV}_replay_$nonce" else stagePath
+      if (isReplay) s"$root/stage/v${nextV}_replay_$stageNonce" else stagePath
     // staging = write ONLY the admitted shard rows; published files
     // are referenced, never copied
     beforeStage() // test seam: park a loser so its STAGING write runs
@@ -1139,8 +1095,8 @@ object Pipeline {
     // row, and admission's cost is per-ACTION scheduling, not data —
     // one pass also carries the shard/admitted accounting that used
     // to be separate count() jobs.
-    val totalsRow = s.read.parquet(s"$root/stats/totals")
-      .filter(col("version") <= prevV)
+    val totalsRow = s.read.schema("n BIGINT, nnull BIGINT, nfp BIGINT")
+      .parquet(log.meta(prevV, "totals"): _*)
       .agg(coalesce(sum(col("n")), lit(0L)).as("n1"),
         coalesce(sum(col("nnull")), lit(0L)).as("nnull1"),
         coalesce(sum(col("nfp")), lit(0L)).as("nfp1"))
@@ -1164,15 +1120,15 @@ object Pipeline {
     // the full-outer join below keeps NULL keys unmatched exactly
     // like the full-scan audit's join — composed and full-scan agree
     // even on a NULL-lang corpus)
-    val pubLang = s.read.parquet(s"$root/stats/lang")
-      .filter(col("version") <= prevV)
+    val pubLang = s.read.schema("lang STRING, c BIGINT")
+      .parquet(log.meta(prevV, "lang"): _*)
       .groupBy("lang").agg(sum(col("c")).as("c1"))
     val stagedLang = pubLang.select(col("lang"), col("c1").as("c"))
       .unionByName(admitted.groupBy("lang").agg(count(lit(1)).as("c")))
       .groupBy("lang").agg(sum(col("c")).as("c2"))
     // keep the lang KEY through the collect: the same bounded rows
     // feed the gates (c1, c2) AND reconstruct the admitted per-lang
-    // delta for the closeLoop append — Σc2 − Σc1 per lang key (the
+    // delta for the closeLoop stats — Σc2 − Σc1 per lang key (the
     // two NULL-lang rows a full-outer join keeps unmatched sum to
     // exactly the admitted NULL-lang count)
     val langRows = pubLang.join(stagedLang, Seq("lang"), "full_outer")
@@ -1184,49 +1140,48 @@ object Pipeline {
     val audit = wapGates(totals, langs)
     val rows = audit.collect()
     val allPass = rows.nonEmpty && rows.forall(_.getAs[Boolean]("pass"))
-    if (allPass && !isReplay) { // publish = manifest rows only
-      val prior = manifestRows.filter(_.getLong(0) == prevV)
-        .map(_.getString(1)).distinct.sorted
-      beforeCommit() // test seam: widen the stage→commit race window
+    if (allPass && !isReplay) { // publish = one log entry
+      val prior = log.paths(prevV)
+      val meta = if (closeLoop) Some(s"$root/meta/v${nextV}_${nonce()}")
+        else None
       // validated commit: the tip this admission staged against must
       // still be the tip — a concurrent writer (compaction, another
       // admission) that published first wins, this one errors with
-      // its staged shard deleted (safe: the nonce makes the staged
-      // path this writer's own, never a published one)
-      try commitManifest(s, root,
-        (prior.toSeq :+ stagePath).map(p => (nextV, p)),
-        expectedTip = Some(publishedMax), who = "admitShard")
-      catch { case e: Throwable => deleteTree(stagePath); throw e }
-      if (closeLoop) {
-        admitted.filter(wapHasText).select(wapFp.as("fp"))
-          .withColumn("version", lit(nextV))
-          .write.mode(SaveMode.Append).parquet(s"$root/index/fp")
-        // the totals and per-lang deltas are already in hand from the
-        // audit's own pass — append the local rows, never re-scan
-        Seq((nKept, totalsRow.getAs[Long]("knull")))
-          .toDF("n", "nnull")
-          .select(col("n"), col("nnull"),
-            (col("n") - col("nnull")).as("nfp"))
-          .withColumn("version", lit(nextV))
-          .write.mode(SaveMode.Append).parquet(s"$root/stats/totals")
-        langRows.toSeq
-          .groupBy(r => Option(r.getString(0)))
-          .map { case (lang, rs) =>
-            (lang.orNull, rs.map(_.getLong(2)).sum - rs.map(_.getLong(1)).sum)
-          }
-          .filter(_._2 > 0L).toSeq
-          .toDF("lang", "c")
-          .withColumn("version", lit(nextV))
-          .write.mode(SaveMode.Append).parquet(s"$root/stats/lang")
+      // its staged shard and deltas deleted (safe: the nonces make
+      // them this writer's own, never published ones)
+      commitOrDiscard(stagePath +: meta.toSeq) {
+        meta.foreach { m =>
+          admitted.filter(wapHasText).select(wapFp.as("fp"))
+            .write.parquet(s"$m/fp")
+          // the totals and per-lang deltas are already in hand from
+          // the audit's own pass — write the local rows, never re-scan
+          Seq((nKept, totalsRow.getAs[Long]("knull")))
+            .toDF("n", "nnull")
+            .select(col("n"), col("nnull"),
+              (col("n") - col("nnull")).as("nfp"))
+            .write.parquet(s"$m/totals")
+          langRows.toSeq
+            .groupBy(r => Option(r.getString(0)))
+            .map { case (lang, rs) =>
+              (lang.orNull,
+                rs.map(_.getLong(2)).sum - rs.map(_.getLong(1)).sum)
+            }
+            .filter(_._2 > 0L).toSeq
+            .toDF("lang", "c")
+            .write.parquet(s"$m/lang")
+        }
+        beforeCommit() // test seam: widen the stage→commit race window
+        commit(s, root, log, "admitShard", restamps = Set(prevV))(
+          _ => Publish(nextV, prior :+ stagePath, meta.toSeq))
       }
     }
-    // the replay scratch is never referenced again (the manifest
-    // never points at it and the report below is a local relation of
+    // the replay scratch is never referenced again (the log never
+    // names it and the report below is a local relation of
     // already-collected rows) — drop it eagerly instead of letting
     // per-replay parquet dirs accumulate until the JVM-exit sweep
-    if (isReplay) deleteTree(writePath)
-    // the published version needs no manifest re-read: a passing
-    // non-replay admission appended exactly nextV (a tip append —
+    if (isReplay) dropScratch(writePath)
+    // the published version needs no log re-read: a passing
+    // non-replay admission committed exactly nextV (a tip publish —
     // nextV = prevV + 1 > publishedMax held by the require above on
     // the non-replay path), anything else left the tip alone
     val version = if (allPass && !isReplay) nextV else publishedMax
@@ -1249,22 +1204,22 @@ object Pipeline {
       Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
       root, closeLoop = false, atVersion = Some(1L))
 
+  /** Best-effort delete of scratch that is provably unreferenced —
+    * replay stage dirs, diff scratch, purged roots
+    * ([[Migrate.deleteTreeQuietly]]).
+    */
+  private def dropScratch(dir: String): Unit = Migrate.deleteTreeQuietly(dir)
+
   /** The published snapshot (data files, fingerprint index, audit
-    * stats, v1 manifest row) is a ONE-TIME artifact per corpus —
+    * stats, v1 log entry) is a ONE-TIME artifact per corpus —
     * d8/d19's persisted-index discipline, so the registered query
     * measures ADMISSION (the recurring per-shard cost a production
     * loop pays), and the publish is a memoized setup warmed through
     * the registry like every other shared relation. Admission is
-    * idempotent on a published root (stage overwrite; duplicate v2
-    * manifest rows keep max(version) = 2), so re-running on the
-    * memoized root is hash-stable.
+    * idempotent on a published root (the pinned replay stages to
+    * scratch and publishes nothing), so re-running on the memoized
+    * root is hash-stable.
     */
-  /** The shutdown sweep's recursive delete ([[Migrate.deleteTree]]),
-    * applied eagerly to scratch that is provably unreferenced —
-    * replay stage dirs and purged roots.
-    */
-  private def deleteTree(dir: String): Unit = Migrate.deleteTree(dir)
-
   /** Eviction (purge or stopped session) deletes the root's tree:
     * unlike [[graft.functions.Memo.memoizedTable]]'s relations (whose
     * files a rebuilt memo re-reads), an evicted root is never
@@ -1274,7 +1229,7 @@ object Pipeline {
     */
   private val pipe15Root: (SparkSession, String) => String =
     graft.functions.Memo.memoizedValue("pipeline.pipe15Publish",
-        onEvict = deleteTree) { (s, d) =>
+        onEvict = dropScratch) { (s, d) =>
       val root = Migrate.tempDir("pipe15")
       pipe15PublishV1(s, d, root)
       root
@@ -1282,7 +1237,7 @@ object Pipeline {
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe15Publish",
     (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe15Root(s, d)}/manifest"))
+      readLog(s, pipe15Root(s, d)).toDF(s))
 
   def pipe15IncrementalWap(s: SparkSession, d: String): DataFrame =
     pipe15Admit(s, d, pipe15Root(s, d))
@@ -1345,15 +1300,15 @@ object Pipeline {
     * version and the compacted one, and the oracle recomputes BOTH
     * rows from the raw corpus — equal by construction only if the
     * rewrite lost and invented nothing. Replays (the bench
-    * re-samples) rewrite to a scratch path the manifest never
-    * references and delete it after (pipe15's replay discipline), so
+    * re-samples) rewrite to a scratch path the log never names and
+    * delete it after (pipe15's replay discipline), so
     * published compacted files are never overwritten in place.
     *
     * 100 TB shape: the rewrite reads and writes ONLY the live file
     * set (one pass, no shuffle beyond the repartition exchange that
     * IS the bin-packing), file-count targeting comes from the
-    * manifest's bounded listing (never a data scan), and the publish
-    * is one manifest append — s13's size-targeted compaction lifted
+    * log's bounded listing (never a data scan), and the publish is
+    * one log entry — s13's size-targeted compaction lifted
     * to manifest-versioned semantics.
     */
   private val Pipe16TargetBytes = 32L << 20
@@ -1368,14 +1323,13 @@ object Pipeline {
     */
   private val pipe16Setup: (SparkSession, String) => (String, Long) =
     graft.functions.Memo.memoizedValue("pipeline.pipe16Setup",
-        onEvict = (t: (String, Long)) => deleteTree(t._1)) { (s, d) =>
+        onEvict = (t: (String, Long)) => dropScratch(t._1)) { (s, d) =>
       val root = Migrate.tempDir("pipe16")
       pipe15PublishV1(s, d, root)
       admitShard(s,
         Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
         root, closeLoop = true)
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
+      val maxV = readLog(s, root).tip.get
       (root, maxV)
     }
 
@@ -1386,7 +1340,7 @@ object Pipeline {
       // timed figure is then always the replay-rewrite (its actual
       // recurring cost) and pipe17's never includes a publish
       ensureCompacted(s, root, fromV)
-      s.read.parquet(s"$root/manifest")
+      readLog(s, root).toDF(s)
     })
 
   /** Rewrite version `fromV`'s file set into size-targeted files and
@@ -1408,26 +1362,23 @@ object Pipeline {
       fromV: Long, beforeCommit: () => Unit = () => (),
       beforeStage: () => Unit = () => ()): DataFrame = {
     import s.implicits._
-    val manifest = s.read.parquet(s"$root/manifest")
-    val fromPaths = manifest.filter(col("version") === fromV)
-      .select("path").distinct().collect().map(_.getString(0)).sorted
+    val log = readLog(s, root)
+    val fromPaths = log.paths(fromV)
     require(fromPaths.nonEmpty, s"version $fromV is not published")
     val from = fromPaths.map(s.read.parquet(_)).reduce(_ unionByName _)
     val nextV = fromV + 1
-    val publishedMax = manifest.agg(max(col("version"))).head.getLong(0)
+    val publishedMax = log.tip.get
     // WRITER-UNIQUE rewrite dir (the admitShard staging discipline):
     // two compactions racing from the same fromV both pass the tip
     // guard below — with a shared deterministic data/v{N}_compact the
     // loser would overwrite the winner's PUBLISHED rewrite and then
-    // deleteTree it in its conflict handler, leaving the manifest's
-    // v{N} pointing at nothing (published data loss). Each writer
-    // rewrites into its own dir, commits ITS path, and on conflict
-    // deletes only what it alone wrote; the manifest records the
-    // actual path so no reader depends on the name.
-    val nonce =
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    // delete it in its conflict handler, leaving the log's v{N}
+    // pointing at nothing (published data loss). Each writer rewrites
+    // into its own dir, commits ITS path, and on conflict deletes only
+    // what it alone wrote; the log records the actual path so no
+    // reader depends on the name.
     val targetPrefix = s"$root/data/v${nextV}_compact"
-    val target = s"${targetPrefix}_$nonce"
+    val target = s"${targetPrefix}_${nonce()}"
     // a replay is "A compaction of fromV already published": version
     // nextV exists AND points at a compacted dir (prefix match — the
     // nonce differs per writer, and any committed rewrite of the same
@@ -1436,16 +1387,13 @@ object Pipeline {
     // published by some other writer kind, no compacted dir) and then
     // summarize a path that doesn't exist — that case is a fork, and
     // it fails fast instead
-    val committedCompact = manifest.filter(col("version") === nextV)
-      .select("path").distinct().collect().map(_.getString(0))
-      .filter(_.startsWith(targetPrefix)).sorted
+    val committedCompact = log.paths(nextV).filter(_.startsWith(targetPrefix))
     val isReplay = committedCompact.nonEmpty
     require(isReplay || fromV == publishedMax,
       s"compactVersion: version $nextV is already published by " +
         s"another writer (tip is $publishedMax) — compaction only " +
         "rewrites the tip or replays its own prior rewrite")
-    val writePath = target
-    // bin-packing from the manifest's bounded file listing, never a
+    // bin-packing from the log's bounded file listing, never a
     // data scan: total bytes / target size = output file count
     val conf = s.sparkContext.hadoopConfiguration
     val bytes = fromPaths.map { p =>
@@ -1456,20 +1404,21 @@ object Pipeline {
       (bytes + Pipe16TargetBytes - 1) / Pipe16TargetBytes).toInt
     beforeStage() // test seam: park a loser so its rewrite write runs
                   // after another writer's commit
-    from.repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(writePath)
-    if (!isReplay) {
-      beforeCommit() // test seam: widen the rewrite→commit race window
-      // validated commit (see commitManifest): losing the race to a
-      // concurrent admission errors here with the rewrite
-      // unreferenced — delete it so the loser leaves no orphan
-      // (safe: the nonce makes writePath this writer's own, never
-      // one another writer could have published)
-      try commitManifest(s, root, Seq((nextV, target)),
-        expectedTip = Some(publishedMax), who = "compactVersion")
-      catch { case e: Throwable => deleteTree(writePath); throw e }
+    // validated commit (see [[commit]]): losing the race to a
+    // concurrent admission errors here with the rewrite unreferenced
+    // — it is deleted so the loser leaves no orphan (safe: the nonce
+    // makes the target this writer's own, never one another writer
+    // could have published)
+    commitOrDiscard(Seq(target)) {
+      from.repartition(nFiles)
+        .write.mode(SaveMode.ErrorIfExists).parquet(target)
+      if (!isReplay) {
+        beforeCommit() // test seam: widen the rewrite→commit race window
+        commit(s, root, log, "compactVersion")(
+          _ => Publish(nextV, Seq(target), Nil))
+      }
     }
-    if (isReplay) deleteTree(writePath)
+    if (isReplay) dropScratch(target)
     val chkCols = docChkCols
     def summarize(v: Long, df: DataFrame) =
       df.agg(count(lit(1)).as("n_docs"),
@@ -1496,8 +1445,7 @@ object Pipeline {
     */
   private[graft] def ensureCompacted(s: SparkSession, root: String,
       fromV: Long): Unit =
-    if (s.read.parquet(s"$root/manifest")
-        .filter(col("version") === fromV + 1).limit(1).count() == 0) {
+    if (readLog(s, root).paths(fromV + 1).isEmpty) {
       compactVersion(s, root, fromV).collect(); ()
     }
 
@@ -1530,13 +1478,10 @@ object Pipeline {
   def pipe17VersionDiff(s: SparkSession, d: String): DataFrame = {
     val (root, fromV) = pipe16Setup(s, d)
     ensureCompacted(s, root, fromV)
-    val manifest = s.read.parquet(s"$root/manifest")
-    val versions = manifest.select("version").distinct()
-      .collect().map(_.getLong(0)).sorted
+    val log = readLog(s, root)
+    val versions = log.versions.toArray
     def resolve(v: Long): DataFrame =
-      manifest.filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0)).sorted
-        .map(s.read.parquet(_)).reduce(_ unionByName _)
+      log.paths(v).map(s.read.parquet(_)).reduce(_ unionByName _)
     // engine-side row hash (never crosses to the oracle — only the
     // COUNTS do): any column edit flips it. The concat separator is
     // \u0001 (invisible in most renderings — it is NOT an empty
@@ -1588,7 +1533,7 @@ object Pipeline {
       // the scratch is provably unreferenced once the bounded rows
       // are in hand (the result below is a local relation) — delete
       // eagerly, like admitShard's replay stage dirs
-      finally deleteTree(scratch)
+      finally dropScratch(scratch)
     import s.implicits._
     rows.toDF("from_version", "to_version",
       "n_added", "n_removed", "n_changed")
@@ -1625,7 +1570,7 @@ object Pipeline {
   /** pipe18: ROLLBACK PUBLISH — the WAP lifecycle's undo: promote a
     * PRIOR version's exact file set as the next manifest version
     * (Iceberg's `rollback_to_snapshot` semantics). A bad publish is
-    * undone by ONE manifest append that re-stamps the target
+    * undone by ONE log entry that re-stamps the target
     * version's paths — data files move never, the bad version's
     * files stay published for forensics, and readers that resolved
     * the bad tip mid-query finish on an intact snapshot. The report
@@ -1637,15 +1582,15 @@ object Pipeline {
     * (v2/v3 content differs from v1's in count and checksum) or
     * copying instead of referencing hash-mismatches.
     *
-    * 100 TB shape: rollback is manifest-only — one bounded listing
-    * read + one bounded append; the only data pass is the report's
+    * 100 TB shape: rollback is metadata-only — one log read + one
+    * log entry; the only data pass is the report's
     * checksum over the two resolved snapshots, and a production
     * rollback skips even that (the checksum here is the test
     * contract, not the operator cost).
     */
   private val pipe18Setup: (SparkSession, String) => (String, Long) =
     graft.functions.Memo.memoizedValue("pipeline.pipe18Setup",
-        onEvict = (t: (String, Long)) => deleteTree(t._1)) { (s, d) =>
+        onEvict = (t: (String, Long)) => dropScratch(t._1)) { (s, d) =>
       // a settled 3-version root OF ITS OWN: rolling back pipe16's
       // root would grow a (3,4) transition into pipe17's diff. The
       // admitted version is DERIVED (maxV), which keeps the OPERATOR
@@ -1660,15 +1605,14 @@ object Pipeline {
       admitShard(s,
         Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
         root, closeLoop = true)
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
+      val maxV = readLog(s, root).tip.get
       ensureCompacted(s, root, maxV)
       (root, maxV + 1)
     }
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe18Setup",
     (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe18Setup(s, d)._1}/manifest"))
+      readLog(s, pipe18Setup(s, d)._1).toDF(s))
 
   /** Publish `toV` as a re-stamp of `targetV`'s paths; idempotent on
     * replay (the bench re-samples), fail-fast on a fork (`toV`
@@ -1677,49 +1621,38 @@ object Pipeline {
   private[graft] def rollbackTo(s: SparkSession, root: String,
       targetV: Long, toV: Long,
       beforeCommit: () => Unit = () => ()): DataFrame = {
-    import s.implicits._
-    // a parquet read snapshots its file listing at definition — the
-    // manifest must be re-listed after the append, or the shared-path
-    // check below would judge pre-append state
-    def paths(v: Long): Seq[String] =
-      s.read.parquet(s"$root/manifest")
-        .filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-    val target = paths(targetV)
+    val log = readLog(s, root)
+    val target = log.paths(targetV)
     require(target.nonEmpty, s"rollbackTo: version $targetV is not published")
     // an EXPIRED version must not come back as the tip: pipe20's
     // vacuum deleted the dirs only it referenced, so re-stamping its
-    // paths would publish a version that silently fails to resolve
-    // (the manifest itself never records expiry — the tombstone
-    // relation beside it does). Unlocked fast-fail here; the
-    // authoritative re-check runs under the commit lock below,
-    // closing the observe→commit window against a concurrent vacuum
-    // (which tombstones under the same lock).
-    def requireNotExpired(): Unit =
-      require(!expiredVersions(s, root)(targetV),
-        s"rollbackTo: version $targetV is expired — its unreferenced " +
-          "files were vacuumed and its snapshot cannot be re-published")
-    requireNotExpired()
-    val existing = paths(toV)
-    if (existing.isEmpty) {
-      beforeCommit() // test seam: widen the observe→commit race window
-      // validated commit: a rollback publishes THE NEXT version, so
-      // the tip it observed must still be toV - 1 — losing a race to
-      // a concurrent writer errors instead of forking the manifest;
-      // the tombstone re-check runs under the same lock a vacuum
-      // tombstones under, so "observed live, expired while parked"
-      // fails HERE instead of publishing a dangling snapshot
-      commitManifest(s, root, target.map(p => (toV, p)),
-        expectedTip = Some(toV - 1), who = "rollbackTo",
-        underLock = () => requireNotExpired())
-    }
-    else require(existing == target,
-      s"rollbackTo: version $toV is already published with a different " +
-        s"file set (fork) — refusing to re-stamp it as a rollback")
+    // paths would publish a version that silently fails to resolve.
+    // Fast-fail here; the commit re-checks every expire entry up to
+    // the one it lands after, so "observed live, expired while
+    // parked" fails there instead of publishing a dangling snapshot
+    require(!log.expired(targetV),
+      s"rollbackTo: version $targetV is expired — its unreferenced " +
+        "files were vacuumed and its snapshot cannot be re-published")
+    val existing = log.paths(toV)
+    val after =
+      if (existing.isEmpty) {
+        beforeCommit() // test seam: widen the observe→commit race window
+        // validated commit: a rollback publishes THE NEXT version, so
+        // the tip it observed must still be toV - 1 — losing a race to
+        // a concurrent writer errors instead of forking the log
+        commit(s, root, log, "rollbackTo", restamps = Set(targetV))(
+          _ => Publish(toV, target, Nil))
+      } else {
+        require(existing == target,
+          s"rollbackTo: version $toV is already published with a " +
+            "different file set (fork) — refusing to re-stamp it as a " +
+            "rollback")
+        log
+      }
     val chkCols = docChkCols
-    val shared = paths(toV) == target
+    val shared = after.paths(toV) == target
     def row(v: Long) =
-      paths(v).map(s.read.parquet(_)).reduce(_ unionByName _)
+      after.paths(v).map(s.read.parquet(_)).reduce(_ unionByName _)
         .agg(count(lit(1)).as("n_docs"),
           Norm.sparkRowChecksum(chkCols).as("row_checksum"))
         .select(lit(v).as("version"), col("n_docs"),
@@ -1758,12 +1691,13 @@ object Pipeline {
     * shared with any LIVE version (the manifest re-stamps prior paths
     * on every admission and rollback, so sharing is the NORM) must
     * survive — the report proves it by resolving every live version
-    * AFTER the deletes and counting its docs. The manifest itself is
-    * never rewritten (append-only stays append-only — readers and the
-    * conflict protocol keep their one source of truth); expiry is
-    * recorded as a version-level tombstone relation beside it, and
-    * the at-rest index/stats deltas of expired versions remain (they
-    * are bounded metadata that later pinned admissions still compose
+    * AFTER the deletes and counting its docs. Expiry is one more
+    * entry in the version log — an expire entry carrying the full
+    * tombstoned set and the retention `keepLast` — committed BEFORE
+    * any delete, so a crash mid-delete leaves tombstoned-but-present
+    * dirs a replay re-deletes, never deleted-but-live versions. The
+    * at-rest index/stats deltas of expired versions remain (they are
+    * bounded metadata that later pinned admissions still compose
     * against).
     *
     * Report: one row per manifest version — (version, is_live,
@@ -1775,163 +1709,77 @@ object Pipeline {
     * survive), v3 recounts to the admitted corpus, v4 to the base.
     *
     * Idempotent by construction: a replay recomputes the same live
-    * set from the untouched manifest, re-deletes already-gone dirs
-    * (no-op), overwrites the tombstones with the same rows, and
-    * recounts the same live versions.
+    * set from the same publishes, re-deletes already-gone dirs
+    * (no-op), commits an expire entry with the same set, and recounts
+    * the same live versions.
     *
-    * 100 TB shape: pure manifest arithmetic — one bounded listing
-    * read decides the safe-to-delete set (set difference over path
+    * Retention is SERIALIZED per root: the root's policy is the
+    * `keepLast` of its latest expire entry, and a vacuum with a
+    * different value fails loud unless it carries an explicit
+    * `updatePolicy` change — two concurrent vacuums with conflicting
+    * windows cannot both commit silently (the second re-decides
+    * against the first's entry and refuses).
+    *
+    * 100 TB shape: pure log arithmetic — one log read decides the safe-to-delete set (set difference over path
     * strings, never a data scan); deletes are O(dirs); the only data
     * pass is the report's recount, which a production vacuum skips
     * (here it IS the safety proof the oracle hashes).
     */
-  /** The root's expired-version tombstones (empty before any vacuum
-    * ran) — ONE reader shared by rollbackTo's guard (both its
-    * unlocked fast-fail and its locked re-check) so the two can
-    * never read the relation differently.
-    */
-  private def expiredVersions(s: SparkSession, root: String): Set[Long] = {
-    val expPath = new org.apache.hadoop.fs.Path(s"$root/expired")
-    if (expPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(expPath))
-      s.read.schema("version BIGINT").parquet(s"$root/expired")
-        .collect().map(_.getLong(0)).toSet
-    else Set.empty[Long]
-  }
-
-  /** The root's recorded retention policy — a tiny text file holding
-    * the pinned `keepLast`, written under the commit lock at the
-    * FIRST vacuum. Later vacuums validate against it instead of
-    * silently racing: two concurrent vacuums with CONFLICTING
-    * keepLast values would otherwise interleave legally under the
-    * lock yet expire with a narrower window during the other's
-    * post-release recount. A deliberate serial policy change goes
-    * through `updatePolicy = true`, which rewrites the file under
-    * the same lock.
-    */
-  private def retentionPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/retention.policy")
-
-  private def readRetention(s: SparkSession, root: String): Option[Int] = {
-    val p = retentionPath(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try {
-          // loop to EOF — a single read() may legally return short,
-          // and a clipped "12" parsing as 1 would fabricate a
-          // retention conflict
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](32)
-          var n = in.read(buf)
-          while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-          new String(out.toByteArray, "UTF-8").trim
-        } finally in.close()
-      // an empty or garbled file is a vacuum that crashed between
-      // create and write — treat it as NO recorded policy so the
-      // current vacuum re-pins (exactly what the crashed first
-      // vacuum would have done), instead of wedging every future
-      // vacuum on a NumberFormatException it can never clear
-      text.toIntOption
-    }
-  }
-
-  private def writeRetention(s: SparkSession, root: String,
-      keepLast: Int): Unit = {
-    val p = retentionPath(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(keepLast.toString.getBytes("UTF-8"))
-    finally out.close()
-  }
-
   private[graft] def expireVersions(s: SparkSession, root: String,
       keepLast: Int, updatePolicy: Boolean = false): DataFrame = {
     import s.implicits._
     require(keepLast >= 1,
       "expireVersions: must keep at least the tip version")
-    // the decide + tombstone section runs UNDER THE COMMIT LOCK:
-    // unserialized, a vacuum could expire a version between a
-    // rollback's observe and its commit — the tip would not move, so
-    // the rollback's tip validation would pass and publish a version
-    // pointing at just-deleted dirs. Under the shared lock, either
-    // the rollback commits first (its target's dirs become
-    // live-referenced and survive) or the vacuum's tombstone lands
-    // first and the rollback's locked re-check refuses. The PHYSICAL
-    // delete pass and the data-sized recount both run AFTER release
-    // — see below.
-    val (manifestRows, versions, live, expP) =
-      withCommitLock(s, root, "expireVersions") {
-        val manifestRows = s.read.parquet(s"$root/manifest")
-          .select("version", "path").distinct().collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-        require(manifestRows.nonEmpty,
-          s"expireVersions: $root has no published manifest")
-        // retention serialization: the first vacuum pins the root's
-        // keepLast; a later vacuum with a different value fails loud
-        // unless it explicitly carries the policy change
-        readRetention(s, root) match {
-          case Some(rec) if rec != keepLast && !updatePolicy =>
-            throw new IllegalArgumentException(
-              s"expireVersions: conflicting retention — $root is " +
-                s"pinned to keepLast=$rec (set at its first vacuum); " +
-                s"got keepLast=$keepLast. Pass updatePolicy=true for " +
-                "a deliberate serial retention change.")
-          case Some(rec) =>
-            if (rec != keepLast) writeRetention(s, root, keepLast)
-          case None => writeRetention(s, root, keepLast)
-        }
-        val versions = manifestRows.map(_._1).distinct.sorted
-        // expiry is MONOTONE: once tombstoned, a version stays
-        // expired even if a later vacuum runs with a wider retention
-        // — its unreferenced dirs are already gone, and
-        // "un-tombstoning" it would let a rollback re-stamp a
-        // snapshot that no longer resolves. (The tip can never be
-        // tombstoned: keepLast >= 1 at every vacuum and the manifest
-        // only grows.)
-        val priorExpired = expiredVersions(s, root)
-        val live =
-          versions.takeRight(keepLast).toSet -- priorExpired
-        val liveP = manifestRows.filter(t => live(t._1)).map(_._2).toSet
-        // safe-to-delete = referenced by SOME expired version and NO
-        // live one; anything shared with a live version survives
-        val expP =
-          manifestRows.filterNot(t => live(t._1)).map(_._2).toSet --
-            liveP
-        // durable version-level tombstones land BEFORE the deletes
-        // (the full monotone set, Overwrite: replay-idempotent): a
-        // crash between them leaves tombstoned-but-present dirs — a
-        // later replay re-deletes; the reverse order could leave
-        // deleted-but-untombstoned versions a rollback would happily
-        // re-stamp
-        versions.filterNot(live).toSeq.toDF("version")
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/expired")
-        (manifestRows, versions, live, expP)
-      }
-    // the PHYSICAL delete pass runs AFTER lock release: on an object
-    // store, expiring hundreds of staged/compacted dirs is minutes of
-    // delete RPCs, and holding the lock through them would time out
-    // every concurrent admission/compaction/rollback. The ordering
-    // above already makes this safe — the tombstones are DURABLE
-    // before release, so a rollback's locked re-check refuses an
-    // expired target even while its dirs still exist; a crash
-    // mid-delete replays (re-deleting a tombstoned set is
-    // idempotent); and no later writer can reference an expired-only
-    // dir, because commits only append paths their own writer staged
-    // under a fresh nonce.
-    expP.toSeq.sorted.foreach(deleteTree)
+    // decide + commit the tombstones; the commit re-decides from the
+    // newer log whenever another writer took its entry, so the decided
+    // live set always includes every version published before it
+    val log = commit(s, root, readLog(s, root), "expireVersions")(
+      expiryFor(keepLast, updatePolicy))
+    val versions = log.versions
+    val live = versions.filterNot(log.expired).toSet
+    val liveP = versions.filter(live).flatMap(log.paths).toSet
+    // safe-to-delete = referenced by SOME expired version and NO live
+    // one; anything shared with a live version survives
+    val expP = versions.filterNot(live).flatMap(log.paths).toSet -- liveP
+    // the deletes run after the commit: the tombstones are durable
+    // first, so a rollback of an expired target is refused even while
+    // its dirs still exist; no later writer can reference an
+    // expired-only dir (publishes re-stamp only the tip's or a live
+    // rollback target's paths, plus dirs their own writer staged under
+    // a fresh nonce). A delete that fails fails the vacuum — it never
+    // counts as dropped.
+    expP.toSeq.sorted.foreach(Migrate.deleteTree)
     val rows = versions.map { v =>
-      val vPaths = manifestRows.filter(_._1 == v).map(_._2)
-        .distinct.sorted
+      val vPaths = log.paths(v)
       val nDocs =
         if (live(v)) // resolve AFTER the deletes — the safety proof
           vPaths.map(s.read.parquet(_)).reduce(_ unionByName _).count()
         else -1L
       (v, live(v), vPaths.count(expP).toLong, nDocs)
-    }.toSeq
+    }
     rows.toDF("version", "is_live", "n_dirs_dropped", "n_docs")
+  }
+
+  /** The expire entry a vacuum commits on top of `log`. Expiry is
+    * MONOTONE: once tombstoned, a version stays expired even if a
+    * later vacuum runs with a wider retention — its unreferenced dirs
+    * are already gone, and "un-tombstoning" it would let a rollback
+    * re-stamp a snapshot that no longer resolves. The tip is never
+    * tombstoned: keepLast >= 1 and the publishes only grow.
+    */
+  private[graft] def expiryFor(keepLast: Int, updatePolicy: Boolean)(
+      log: WapLog): Expire = {
+    require(log.tip.nonEmpty,
+      s"expireVersions: the root has no published manifest")
+    log.keepLast.filter(k => k != keepLast && !updatePolicy).foreach { k =>
+      throw new IllegalArgumentException(
+        s"expireVersions: conflicting retention — the root is pinned " +
+          s"to keepLast=$k (set by its last vacuum); got " +
+          s"keepLast=$keepLast. Pass updatePolicy=true for a deliberate " +
+          "serial retention change.")
+    }
+    val live = log.versions.takeRight(keepLast).toSet -- log.expired
+    Expire(log.versions.filterNot(live).toSet, keepLast)
   }
 
   /** A settled 4-version root OF ITS OWN (expiring pipe16/pipe18's
@@ -1943,7 +1791,7 @@ object Pipeline {
     */
   private val pipe20Setup: (SparkSession, String) => String =
     graft.functions.Memo.memoizedValue("pipeline.pipe20Setup",
-        onEvict = deleteTree) { (s, d) =>
+        onEvict = dropScratch) { (s, d) =>
       val root = Migrate.tempDir("pipe20")
       pipe15PublishV1(s, d, root)
       admitShard(s,
@@ -1954,8 +1802,7 @@ object Pipeline {
       // loop settles lower and the setup must still build a valid
       // root — the REGISTERED oracle pins 1..4 for the benchmark
       // corpus, the OPERATOR stays total
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
+      val maxV = readLog(s, root).tip.get
       ensureCompacted(s, root, maxV)
       rollbackTo(s, root, targetV = 1L, toV = maxV + 2)
       root
@@ -1963,7 +1810,7 @@ object Pipeline {
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe20Setup",
     (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe20Setup(s, d)}/manifest"))
+      readLog(s, pipe20Setup(s, d)).toDF(s))
 
   def pipe20SnapshotExpire(s: SparkSession, d: String): DataFrame =
     expireVersions(s, pipe20Setup(s, d), keepLast = 2)
@@ -1996,15 +1843,13 @@ object Pipeline {
     * what remains IF it is older than `graceMs`. The grace period is
     * the safety contract: a LIVE writer's staged dir is also
     * unreferenced until its commit, so production grace must exceed
-    * the longest stage→commit window (Iceberg defaults to days);
-    * the DECIDE runs under the commit lock, so the referenced set is
-    * a consistent manifest snapshot, and the grace window covers
-    * writers parked mid-stage. The physical deletes run after lock
-    * release (a decided orphan can never become referenced — commits
-    * only append paths their own writer staged under a fresh nonce),
-    * so an object-store-sized delete pass never stalls concurrent
-    * commits. Meta relations (manifest, index, stats, expired)
-    * live outside the swept namespaces by construction.
+    * the longest stage→commit window (Iceberg defaults to days).
+    * The sweep takes no lock and commits no entry: it LISTS the
+    * namespaces first and reads the log once after, so every dir
+    * committed before that read is referenced in it, and a dir
+    * committed after it was staged before the listing — a live
+    * writer, which the grace window covers. Meta (`manifest/`,
+    * `meta/`) lives outside the swept namespaces by construction.
     *
     * The sweep also garbage-collects CRASHED STREAMING-ADMISSION
     * CHECKPOINTS: a pipe19-style ingest keys its Structured Streaming
@@ -2026,7 +1871,7 @@ object Pipeline {
     * dirs, tip recount after the sweep — is deterministic under the
     * bench's re-sampling.
     *
-    * 100 TB shape: one bounded manifest read + one directory listing
+    * 100 TB shape: one log read + one directory listing
     * per namespace (NOT a recursive file walk — staging dirs are the
     * unit of both commit and cleanup); deletes are O(orphans); the
     * tip recount is the safety proof, skippable in production.
@@ -2059,100 +1904,80 @@ object Pipeline {
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
     // BOTH sides of the membership test are scheme-stripped: on an
-    // hdfs:// root the manifest records scheme-qualified paths while
+    // hdfs:// root the log records scheme-qualified paths while
     // listStatus yields qualified ones too — comparing a stripped
-    // listing against raw manifest strings would make every
-    // referenced dir look orphaned (a sweep that deletes the corpus)
-    def norm(p: String): String = org.apache.hadoop.fs.Path
-      .getPathWithoutSchemeAndAuthority(new org.apache.hadoop.fs.Path(p))
-      .toString
-    val (orphans, deadCkpts, referencedN) =
-      withCommitLock(s, root, "removeOrphans") {
-        val referenced = s.read.parquet(s"$root/manifest")
-          .select("path").distinct().collect()
-          .map(r => norm(r.getString(0))).toSet
-        require(referenced.nonEmpty,
-          s"removeOrphans: $root has no published manifest")
-        val now = System.currentTimeMillis()
-        val orphans = Seq("stage", "data").flatMap { ns =>
-          val nsPath = new org.apache.hadoop.fs.Path(s"$root/$ns")
-          val fs = nsPath.getFileSystem(conf)
-          if (!fs.exists(nsPath)) Seq.empty
-          else fs.listStatus(nsPath).toSeq.filter(_.isDirectory)
-            .filterNot(st =>
-              referenced(org.apache.hadoop.fs.Path
-                .getPathWithoutSchemeAndAuthority(st.getPath).toString))
-            .filter(st => now - st.getModificationTime >= graceMs)
-            .map(st => org.apache.hadoop.fs.Path
-              .getPathWithoutSchemeAndAuthority(st.getPath).toString)
-        }
-        // dead streaming checkpoints: run-id dirs under ckpt/ with no
-        // write activity inside grace — see ckptNewestMtime for why
-        // activity is read off FILE mtimes two levels deep
-        val ckptRoot = new org.apache.hadoop.fs.Path(s"$root/ckpt")
-        val ckFs = ckptRoot.getFileSystem(conf)
-        val deadCkpts =
-          if (!ckFs.exists(ckptRoot)) Seq.empty[String]
-          else ckFs.listStatus(ckptRoot).toSeq.filter(_.isDirectory)
-            .filter(st => now - ckptNewestMtime(ckFs, st) >= graceMs)
-            .map(st => org.apache.hadoop.fs.Path
-              .getPathWithoutSchemeAndAuthority(st.getPath).toString)
-        (orphans, deadCkpts, referenced.size.toLong)
-      }
-    // physical deletes AFTER lock release — a decided data orphan
-    // cannot become referenced, so that delete pass races nothing and
-    // an object-store-sized sweep never holds commits past the waiter
-    // deadline
-    orphans.sorted.foreach(deleteTree)
-    // a decided-dead CHECKPOINT, unlike a data orphan, CAN come back
-    // to life between the locked decide and this pass: a restart of
-    // the same logical run legitimately reuses its run id (the
-    // recovery path). Re-check activity immediately before each
-    // delete — a revived run has written fresh offset files by now
-    // and is skipped; the remaining window (recheck → delete) is
-    // RPC-sized against a graceMs-sized contract.
-    val ckptDropped = deadCkpts.sorted.count { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val dfs = p.getFileSystem(conf)
-      val stillDead =
-        try {
-          val st = dfs.getFileStatus(p)
-          System.currentTimeMillis() - ckptNewestMtime(dfs, st) >= graceMs
-        } catch { case _: java.io.FileNotFoundException => false }
-      if (stillDead) deleteTree(dir)
-      stillDead
+    // listing against raw log strings would make every referenced dir
+    // look orphaned (a sweep that deletes the corpus)
+    def norm(p: org.apache.hadoop.fs.Path): String =
+      org.apache.hadoop.fs.Path.getPathWithoutSchemeAndAuthority(p).toString
+    def dirsUnder(ns: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+      val nsPath = new org.apache.hadoop.fs.Path(s"$root/$ns")
+      val fs = nsPath.getFileSystem(conf)
+      if (!fs.exists(nsPath)) Seq.empty
+      else fs.listStatus(nsPath).toSeq.filter(_.isDirectory)
     }
+    val now = System.currentTimeMillis()
+    val aged = Seq("stage", "data").flatMap(dirsUnder)
+      .filter(st => now - st.getModificationTime >= graceMs)
+      .map(st => norm(st.getPath))
+    val log = readLog(s, root)
+    val referenced = log.publishes.flatMap(_.data)
+      .map(p => norm(new org.apache.hadoop.fs.Path(p))).toSet
+    require(referenced.nonEmpty,
+      s"removeOrphans: $root has no published manifest")
+    val orphans = aged.filterNot(referenced)
+    // a decided orphan can never become referenced — publishes only
+    // name paths their own writer staged under a fresh nonce, or
+    // re-stamp paths the log already names
+    orphans.sorted.foreach(Migrate.deleteTree)
+    // dead streaming checkpoints: run-id dirs under ckpt/ with no
+    // write activity inside grace — see ckptNewestMtime for why
+    // activity is read off FILE mtimes two levels deep. A dead run
+    // CAN come back to life before its delete: a restart of the same
+    // logical run legitimately reuses its run id (the recovery path).
+    // Activity is read immediately before each delete, so a revived
+    // run that has written fresh offset files is skipped; the
+    // remaining window (read → delete) is RPC-sized against a
+    // graceMs-sized contract.
+    val ckptDropped = dirsUnder("ckpt").map(st => norm(st.getPath)).sorted
+      .count { dir =>
+        val p = new org.apache.hadoop.fs.Path(dir)
+        val dfs = p.getFileSystem(conf)
+        val dead =
+          try {
+            val st = dfs.getFileStatus(p)
+            System.currentTimeMillis() - ckptNewestMtime(dfs, st) >= graceMs
+          } catch { case _: java.io.FileNotFoundException => false }
+        if (dead) Migrate.deleteTree(dir)
+        dead
+      }
     // tip recount AFTER the sweep — the referenced-dirs-survive proof
-    val manifest = s.read.parquet(s"$root/manifest")
-    val tip = manifest.agg(max(col("version"))).head.getLong(0)
-    val tipDocs = manifest.filter(col("version") === tip)
-      .select("path").distinct().collect().map(_.getString(0)).sorted
+    val tipDocs = log.paths(log.tip.get)
       .map(s.read.parquet(_)).reduce(_ unionByName _).count()
     Seq(("orphan_dirs_dropped", orphans.size.toLong),
       ("ckpt_runs_dropped", ckptDropped.toLong),
-      ("referenced_dirs", referencedN),
+      ("referenced_dirs", referenced.size.toLong),
       ("tip_docs", tipDocs)).toDF("metric", "value")
   }
 
   /** A settled 3-version root of its own (publish, admit, compact). */
   private val pipe21Setup: (SparkSession, String) => String =
     graft.functions.Memo.memoizedValue("pipeline.pipe21Setup",
-        onEvict = deleteTree) { (s, d) =>
+        onEvict = dropScratch) { (s, d) =>
       val root = Migrate.tempDir("pipe21")
       pipe15PublishV1(s, d, root)
       admitShard(s,
         Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
         root, closeLoop = true)
       // derived, not pinned — see pipe20Setup
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
+      val maxV = readLog(s, root).tip.get
       ensureCompacted(s, root, maxV)
       root
     }
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe21Setup",
     (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe21Setup(s, d)}/manifest"))
+      readLog(s, pipe21Setup(s, d)).toDF(s))
 
   def pipe21OrphanSweep(s: SparkSession, d: String): DataFrame = {
     val root = pipe21Setup(s, d)
@@ -2192,7 +2017,7 @@ object Pipeline {
     * arriving shard, deduplicated against the fingerprint index AS OF
     * ITS ARRIVAL. foreachBatch is the right seam because admission is
     * not a row-wise sink — it is a transactional publish (stage,
-    * audit, manifest append) that must see the whole shard.
+    * audit, log entry) that must see the whole shard.
     *
     * The report states ONLY order-invariant facts — final version,
     * final corpus size, total admitted, total rejected-duplicate —
@@ -2204,8 +2029,8 @@ object Pipeline {
     *
     * 100 TB shape: per arriving shard the loop pays exactly pipe15's
     * metadata-only admission (index anti-join + shard-sized stage
-    * write + bounded stat composition + manifest append); the stream
-    * holds NO state of its own — the at-rest index/stats/manifest ARE
+    * write + bounded stat composition + one log entry); the stream
+    * holds NO state of its own — the at-rest index/stats/log ARE
     * the state, which is what makes the ingest restartable from the
     * checkpoint without rebuilding anything.
     */
@@ -2221,7 +2046,7 @@ object Pipeline {
 
   private[graft] val pipe19Inputs: (SparkSession, String) => String =
     graft.functions.Memo.memoizedValue("pipeline.pipe19Inputs",
-        onEvict = deleteTree) { (s, d) =>
+        onEvict = dropScratch) { (s, d) =>
       val dir = Migrate.tempDir("pipe19_in")
       val docs = Tables.load(s, d, "documents")
       docs.filter(col("doc_id") % 5 <= 2)
@@ -2310,8 +2135,8 @@ object Pipeline {
     try require(q.awaitTermination(300000),
       "pipe19 stream did not terminate within 300 s")
     finally { graft.streaming.Cdc.dumpProgress("pipe19", q); q.stop() }
-    val n1 = s.read.parquet(s"$root/stats/totals")
-      .filter(col("version") <= 1L)
+    val n1 = s.read.schema("n BIGINT, nnull BIGINT, nfp BIGINT")
+      .parquet(readLog(s, root).meta(1L, "totals"): _*)
       .agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
     val admitted = acc.map(_._1).sum
     val rows = Seq(
@@ -2319,7 +2144,7 @@ object Pipeline {
       ("n_docs_final", n1 + admitted),
       ("admitted_total", admitted),
       ("rejected_dup_total", acc.map(_._2).sum))
-    deleteTree(root) // per-run scratch: report rows are local now
+    dropScratch(root) // per-run scratch: report rows are local now
     rows.toDF("metric", "value")
   }
 

@@ -150,7 +150,7 @@ object Cdc {
       state.write.mode("overwrite").parquet(scratch)
       s.read.schema(state.schema).parquet(scratch)
         .write.mode("overwrite").parquet(stateDir)
-    } finally graft.operators.Migrate.deleteTree(scratch)
+    } finally graft.operators.Migrate.deleteTreeQuietly(scratch)
   }
 
   // ------------------------------------- custom keyed state (C3 typed)

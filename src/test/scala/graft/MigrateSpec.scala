@@ -9,6 +9,19 @@ import graft.operators.Migrate.ChunkSpec
 
 class MigrateSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
+  test("fastTempDir: an unusable SPARK_GRAFT_STREAM_SCRATCH fails, naming it") {
+    val missing = java.nio.file.Files.createTempDirectory("graft_scr")
+      .resolve("absent").toString
+    val e = intercept[IllegalArgumentException] {
+      Migrate.fastTempDir("t", scratchEnv = Some(missing))
+    }
+    assert(e.getMessage.contains(s"SPARK_GRAFT_STREAM_SCRATCH=$missing"),
+      e.getMessage)
+    val parent = java.nio.file.Files.createTempDirectory("graft_scr")
+    val dir = Migrate.fastTempDir("t", scratchEnv = Some(parent.toString))
+    assert(java.nio.file.Paths.get(dir).getParent == parent)
+  }
+
   test("planChunks covers [min,max] exactly, no gaps, no overlaps") {
     val gen = for {
       minK <- Gen.choose(-1000L, 1000L)

@@ -16,19 +16,27 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   private def freshWork() =
     java.nio.file.Files.createTempDirectory("graft_pipe").toString
 
-  /** Staged/compacted dirs are writer-unique (nonce-suffixed) since
-    * the commit-conflict fixes — specs resolve the actual path from
-    * the manifest by version + marker instead of hard-coding names.
+  private def wapLog(root: String): Pipeline.WapLog =
+    Pipeline.readLog(spark, root)
+
+  /** Landing/staged/compacted dirs are writer-unique (nonce-suffixed)
+    * — specs resolve the actual path from the version log by version
+    * + marker instead of hard-coding names.
     */
   private def pathLike(root: String, v: Long, marker: String): String = {
-    import org.apache.spark.sql.functions.col
-    val ps = spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === v).select("path").distinct()
-      .collect().map(_.getString(0)).filter(_.contains(marker))
+    val ps = wapLog(root).paths(v).filter(_.contains(marker))
     assert(ps.length == 1,
-      s"expected one v$v path containing '$marker', got ${ps.toSeq}")
+      s"expected one v$v path containing '$marker', got $ps")
     ps.head
   }
+
+  /** The first publish's landing dir, `data/v1_{nonce}`. */
+  private def v1Dir(root: String): String = pathLike(root, 1L, "/data/v1_")
+
+  /** Resolve version `v` through the log and count its rows. */
+  private def countOf(root: String, v: Long): Long =
+    wapLog(root).paths(v).map(spark.read.parquet(_))
+      .reduce(_ unionByName _).count()
 
   private def dirNames(dir: String): Seq[String] =
     Option(new java.io.File(dir).listFiles())
@@ -257,7 +265,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // file-level snapshot of the published corpus BEFORE staging
     // (the s19 contract pattern): name, length, and mtime per file
     def v1Files(): Map[String, (Long, Long)] =
-      new java.io.File(s"$root/data/v1").listFiles()
+      new java.io.File(v1Dir(root)).listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> ((f.length(), f.lastModified()))).toMap
     val before = v1Files()
@@ -281,14 +289,13 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(stagedIds.subsetOf(shardIds),
       "stage dir must contain only shard docs")
     // published v2 resolves to v1 files + admitted files via the
-    // manifest alone: reading the union reproduces published ∪ kept
-    val manifest = spark.read.parquet(s"$root/manifest")
-    val vMax = manifest.agg(max(col("version"))).head.getLong(0)
+    // log alone: reading the union reproduces published ∪ kept
+    val log = wapLog(root)
+    val vMax = log.tip.get
     assert(vMax == 2L)
-    val paths = manifest.filter(col("version") === vMax)
-      .select("path").collect().map(_.getString(0))
-    assert(paths.length == 2 && paths.contains(s"$root/data/v1") &&
-      paths.exists(_.contains("v2_admitted")), paths.toSeq.toString)
+    val paths = log.paths(vMax)
+    assert(paths.length == 2 && paths.contains(v1Dir(root)) &&
+      paths.exists(_.contains("v2_admitted")), paths.toString)
     val resolved = paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
     assert(resolved.count() ==
       docs.filter(col("doc_id") % 5 =!= 4).count() +
@@ -302,8 +309,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val root = java.nio.file.Files
         .createTempDirectory("graft_p15s").toString
       Pipeline.pipe15PublishV1(spark, sf, root)
-      if (wipe) { // the published BYTES vanish; index/stats/manifest stay
-        val dir = new java.io.File(s"$root/data/v1")
+      if (wipe) { // the published BYTES vanish; index/stats/log stay
+        val dir = new java.io.File(v1Dir(root))
         dir.listFiles().foreach(f => assert(f.delete()))
         assert(dir.listFiles().isEmpty)
       }
@@ -331,18 +338,20 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // snapshot the published v1 files: the guard must fire BEFORE the
     // landing write, or the rejected double publish still tears the
     // live-referenced data dir (review-caught ordering regression)
-    val before = new java.io.File(s"$root/data/v1").listFiles()
+    val before = new java.io.File(v1Dir(root)).listFiles()
       .filter(_.getName.endsWith(".parquet"))
       .map(f => f.getName -> ((f.length(), f.lastModified()))).toMap
     val e = intercept[IllegalArgumentException] {
       Pipeline.pipe15PublishV1(spark, sf, root)
     }
     assert(e.getMessage.contains("already holds a manifest"))
-    val after = new java.io.File(s"$root/data/v1").listFiles()
+    val after = new java.io.File(v1Dir(root)).listFiles()
       .filter(_.getName.endsWith(".parquet"))
       .map(f => f.getName -> ((f.length(), f.lastModified()))).toMap
     assert(after == before,
       "a rejected double publish must not touch the published files")
+    assert(dirNames(s"$root/data").size == 1 && wapLog(root).lastSeq == 1L,
+      "a rejected double publish must land and commit nothing")
   }
 
   test("pipe15: atVersion pinning is real — a pinned-to-v1 replay on a " +
@@ -401,7 +410,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       else fs.filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> ((f.length(), f.lastModified()))).toMap
     }
-    val v2Dirs = Seq(s"$root/data/v1", pathLike(root, 2L, "v2_admitted"))
+    val v2Dirs = Seq(v1Dir(root), pathLike(root, 2L, "v2_admitted"))
     val beforeByDir = v2Dirs.map(p => p -> files(p)).toMap
     val nFilesV2 = beforeByDir.values.map(_.size).sum
     assert(nFilesV2 >= 2, s"setup must fragment ($nFilesV2 files)")
@@ -416,26 +425,24 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     for (p <- v2Dirs) assert(files(p) == beforeByDir(p),
       s"compaction touched $p")
     // v3 resolves to ONLY the compacted dir, and it is fewer files
-    val m = spark.read.parquet(s"$root/manifest")
     val compactDir = pathLike(root, 3L, "v3_compact")
-    assert(m.filter(col("version") === 3L).select("path").collect()
-      .map(_.getString(0)).toSet == Set(compactDir))
+    assert(wapLog(root).paths(3L) == Seq(compactDir))
     val nFilesV3 = files(compactDir).size
     assert(nFilesV3 > 0 && nFilesV3 < nFilesV2,
       s"v3=$nFilesV3 files vs v2=$nFilesV2")
     // replay: published compacted files untouched, the replay's own
-    // (nonce-suffixed) rewrite dir cleaned, manifest not re-appended,
+    // (nonce-suffixed) rewrite dir cleaned, no log entry added,
     // report identical
     val v3Before = files(compactDir)
     val dataBefore = dirNames(s"$root/data").toSet
-    val mRows = m.count()
+    val nEntries = wapLog(root).lastSeq
     val r2 = rows(Pipeline.compactVersion(spark, root, 2L))
     assert(r2 == r1)
     assert(files(compactDir) == v3Before,
       "replay must not rewrite published compacted files")
     assert(dirNames(s"$root/data").toSet == dataBefore,
       "replay must leave no scratch rewrite dir behind")
-    assert(spark.read.parquet(s"$root/manifest").count() == mRows)
+    assert(wapLog(root).lastSeq == nEntries)
     // compacting a NON-TIP version is a fork, not a replay: v2 is
     // published (by admitShard, at the stage dir — not by this
     // compactor), so rewriting v1 into a second "v2" must fail fast
@@ -464,8 +471,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         ((r.getAs[Long]("value_x1e6"), r.getAs[Boolean]("pass")))).toMap
     assert(r1("published_version") == ((2L, true)), s"r1=$r1")
     // increment 2 must need NO published bytes: wipe v1's data files
-    // AND v2's admitted files — only index/stats/manifest remain
-    for (dir <- Seq(s"$root/data/v1", pathLike(root, 2L, "v2_admitted"))) {
+    // AND v2's admitted files — only index/stats/log remain
+    for (dir <- Seq(v1Dir(root), pathLike(root, 2L, "v2_admitted"))) {
       new java.io.File(dir).listFiles().foreach(f => assert(f.delete()))
     }
     val r2 = Pipeline.admitShard(spark, shardB, root, closeLoop = true)
@@ -500,11 +507,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     for ((g, ev) <- expect)
       assert(r2(g) == ev, s"$g: composed=${r2(g)} full-scan=$ev")
     assert(r2("admitted_new")._1 == keptB.count())
-    // the v3 manifest resolves to all three file sets
-    val m = spark.read.parquet(s"$root/manifest")
-    val paths = m.filter(col("version") === 3L)
-      .select("path").collect().map(_.getString(0)).toSet
-    assert(paths.size == 3 && paths.contains(s"$root/data/v1") &&
+    // the v3 entry resolves to all three file sets
+    val paths = wapLog(root).paths(3L)
+    assert(paths.size == 3 && paths.contains(v1Dir(root)) &&
       paths.exists(_.contains("v2_admitted")) &&
       paths.exists(_.contains("v3_admitted")), paths.toString)
   }
@@ -512,7 +517,6 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("pipe18: rollback re-stamps the target's paths manifest-only — " +
     "time travel intact, replay idempotent, forks fail fast") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_p18")
       .toString
     Pipeline.pipe15PublishV1(spark, sf, root)
@@ -524,7 +528,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       new java.io.File(dir).listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> ((f.length(), f.lastModified()))).toMap
-    val v1Before = files(s"$root/data/v1")
+    val v1 = v1Dir(root)
+    val v1Before = files(v1)
     val compactDir = pathLike(root, 3L, "v3_compact")
     val compactBefore = files(compactDir)
     assert(v1Before.nonEmpty && compactBefore.nonEmpty)
@@ -540,34 +545,26 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(report(0)._3 == report(1)._3)
     assert(report.forall(_._4), "rollback must reference, not copy")
     // manifest-only: no published data file was touched or rewritten
-    assert(files(s"$root/data/v1") == v1Before)
+    assert(files(v1) == v1Before)
     assert(files(compactDir) == compactBefore)
-    val m = spark.read.parquet(s"$root/manifest")
-    assert(m.filter(col("version") === 4L).select("path")
-      .collect().map(_.getString(0)).toSet == Set(s"$root/data/v1"))
+    assert(wapLog(root).paths(4L) == Seq(v1))
     // time travel intact: every prior version still resolves
-    def countOf(v: Long): Long =
-      spark.read.parquet(s"$root/manifest")
-        .filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0))
-        .map(spark.read.parquet(_)).reduce(_ unionByName _).count()
-    val n1 = countOf(1L)
-    assert(countOf(2L) > n1, "v2 must keep the admitted docs")
-    assert(countOf(3L) == countOf(2L))
-    assert(countOf(4L) == n1)
-    // replay idempotent: same report, manifest does not grow
-    val mRows = spark.read.parquet(s"$root/manifest").count()
+    val n1 = countOf(root, 1L)
+    assert(countOf(root, 2L) > n1, "v2 must keep the admitted docs")
+    assert(countOf(root, 3L) == countOf(root, 2L))
+    assert(countOf(root, 4L) == n1)
+    // replay idempotent: same report, the log does not grow
+    val nEntries = wapLog(root).lastSeq
     val replay = Pipeline.rollbackTo(spark, root, targetV = 1L, toV = 4L)
       .collect().map(r => (r.getAs[Long]("version"),
         r.getAs[Long]("n_docs"), r.getAs[String]("row_checksum"),
         r.getAs[Boolean]("files_shared")))
     assert(replay.toSeq == report.toSeq)
-    assert(spark.read.parquet(s"$root/manifest").count() == mRows)
+    assert(wapLog(root).lastSeq == nEntries)
     // fork protection: v5 published by another writer with different
     // paths — re-stamping it as a rollback must refuse
-    Seq((5L, compactDir)).toDF("version", "path")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$root/manifest")
+    Pipeline.commit(spark, root, wapLog(root), "another writer")(
+      _ => Pipeline.Publish(5L, Seq(compactDir), Nil))
     intercept[IllegalArgumentException] {
       Pipeline.rollbackTo(spark, root, targetV = 1L, toV = 5L)
     }
@@ -616,31 +613,27 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
             .get.getAs[Boolean]("pass"), s"admit$i held by gates")
         })
       } :+ Future(retrying("compact") {
-        val tip = spark.read.parquet(s"$root/manifest")
-          .agg(max(col("version"))).head.getLong(0)
-        Pipeline.compactVersion(spark, root, tip).collect(); ()
+        Pipeline.compactVersion(spark, root, wapLog(root).tip.get)
+          .collect(); ()
       }) :+ Future(retrying("vacuum") {
         // the GC races too: keepLast = 3 against whatever history
         // exists when it runs — it must never break a live writer
-        // (deletes only expired-only dirs, serialized under the
-        // commit lock) and never crash
+        // (deletes only expired-only dirs, decided on the log it
+        // commits its expire entry after) and never crash
         Pipeline.expireVersions(spark, root, keepLast = 3).collect()
         ()
       })
     writers.foreach(Await.result(_, 600.seconds))
-    val manifest = spark.read.parquet(s"$root/manifest")
-    val versions = manifest.select("version").distinct()
-      .collect().map(_.getLong(0)).sorted
+    val log = wapLog(root)
+    val versions = log.versions
     // 1 publish + 3 admissions + 1 compaction, no forks, no gaps
-    // (the vacuum appends no manifest rows)
-    assert(versions.toSeq == (1L to 5L), versions.toSeq.toString)
-    def resolved(v: Long) = manifest.filter(col("version") === v)
-      .select("path").distinct().collect().map(_.getString(0))
-      .map(spark.read.parquet(_)).reduce(_ unionByName _)
+    // (the vacuum's expire entry carries no version)
+    assert(versions == (1L to 5L), versions.toString)
+    def resolved(v: Long) = log.paths(v).map(spark.read.parquet(_))
+      .reduce(_ unionByName _)
     // every NON-tombstoned version still resolves (the racing vacuum
     // may legitimately have expired early history)
-    val tombstoned = spark.read.schema("version BIGINT")
-      .parquet(s"$root/expired").collect().map(_.getLong(0)).toSet
+    val tombstoned = log.expired
     assert(tombstoned.forall(_ < versions.max),
       s"the tip can never be tombstoned: $tombstoned")
     for (v <- versions if !tombstoned(v))
@@ -662,148 +655,163 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(resolved(5L).count() == wantFps.count() + nNullBase)
   }
 
-  test("commit lock: a crashed holder's STALE lock is broken and the " +
-    "commit proceeds; a FRESH lock makes the commit wait for release") {
-    import org.apache.spark.sql.functions._
-    // stale: a lock whose mtime stopped advancing LockStaleMs ago is
-    // a dead JVM (a live holder's heartbeat refreshes it) — a new
-    // writer must break it instead of timing out forever
-    val root = java.nio.file.Files.createTempDirectory("graft_lock")
-      .toString
-    val lock = new java.io.File(s"$root/manifest.commit.lock")
-    assert(lock.createNewFile())
-    assert(lock.setLastModified(
-      System.currentTimeMillis() - Pipeline.LockStaleMs - 60000))
-    Pipeline.pipe15PublishV1(spark, sf, root) // would time out unbroken
-    assert(spark.read.parquet(s"$root/manifest").count() > 0)
-    assert(!lock.exists(), "the commit must release (and have broken) " +
-      "the stale lock")
-    // fresh: a just-created lock is a live holder — the commit blocks
-    // until release, then proceeds (no break, no conflict)
-    val root2 = java.nio.file.Files.createTempDirectory("graft_lock2")
-      .toString
-    val lock2 = new java.io.File(s"$root2/manifest.commit.lock")
-    assert(lock2.createNewFile())
-    val releaser = new Thread(() => {
-      Thread.sleep(1500); lock2.delete(); ()
-    })
-    releaser.start()
-    val t0 = System.nanoTime()
-    Pipeline.pipe15PublishV1(spark, sf, root2)
-    val waited = (System.nanoTime() - t0) / 1e9
-    releaser.join()
-    assert(waited >= 1.0,
-      f"the commit must have WAITED for the live lock ($waited%.2f s)")
-    assert(spark.read.parquet(s"$root2/manifest").count() > 0)
-  }
-
-  test("commit lock: FOUR concurrent waiters on one crashed holder's " +
-    "stale lock — the rename-based break admits exactly one holder " +
-    "at a time, every waiter eventually proceeds, and no lock or " +
-    "broken-lock residue remains") {
-    import scala.concurrent.{Await, Future}
+  test("version log: 8 writers race one entry, one version lands, the " +
+    "rest conflict") {
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // the r15 ADVICE race: with a blind delete, waiter B can break +
-    // re-acquire inside waiter A's check-to-delete window and A then
-    // deletes B's FRESH lock — two holders. The rename-based break
-    // claims one incarnation atomically; this drives four breakers
-    // at the same stale lock and asserts the critical section never
-    // saw two threads.
-    val root = java.nio.file.Files.createTempDirectory("graft_lockN")
+    val root = java.nio.file.Files.createTempDirectory("graft_logN")
       .toString
-    val lock = new java.io.File(s"$root/manifest.commit.lock")
-    assert(lock.createNewFile())
-    assert(lock.setLastModified(
-      System.currentTimeMillis() - Pipeline.LockStaleMs - 60000))
-    val inside = new java.util.concurrent.atomic.AtomicInteger(0)
-    val maxInside = new java.util.concurrent.atomic.AtomicInteger(0)
-    val fs = (0 until 4).map { i =>
+    val v1 = Pipeline.commit(spark, root, wapLog(root), "setup")(
+      _ => Pipeline.Publish(1L, Seq(s"$root/data/v1"), Nil))
+    val n = 8
+    val start = new java.util.concurrent.CyclicBarrier(n)
+    val outcomes = (0 until n).map { i =>
       Future {
-        Pipeline.withCommitLock(spark, root, s"w$i") {
-          val now = inside.incrementAndGet()
-          maxInside.updateAndGet(m => math.max(m, now))
-          Thread.sleep(100)
-          inside.decrementAndGet()
-          ()
-        }
+        blocking(start.await()) // more writers than pool threads
+        scala.util.Try(Pipeline.commit(spark, root, v1, s"w$i")(
+          _ => Pipeline.Publish(2L, Seq(s"$root/stage/w$i"),
+            Seq(s"$root/meta/w$i"))))
       }
+    }.map(Await.result(_, 60.seconds))
+    val (won, lost) = outcomes.zipWithIndex.partition(_._1.isSuccess)
+    assert(won.size == 1, s"${won.size} writers committed version 2")
+    lost.foreach { case (t, i) =>
+      val e = t.failed.get
+      assert(e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.contains("commit conflict"), s"w$i: $e")
     }
-    fs.foreach(Await.result(_, 120.seconds))
-    assert(maxInside.get() == 1,
-      s"the lock admitted ${maxInside.get()} concurrent holders")
-    assert(!lock.exists(), "the last release must remove the lock")
-    val residue = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty).map(_.getName)
-      .filter(_.startsWith("manifest.commit.lock"))
-    assert(residue.isEmpty,
-      s"broken-lock residue left behind: ${residue.mkString(",")}")
+    val w = won.head._2
+    val log = wapLog(root)
+    assert(log.versions == Seq(1L, 2L) && log.lastSeq == 2L)
+    // the winner's entry, read raw, parses complete and is its own
+    val dir = new java.io.File(s"$root/manifest/_log")
+    val entry2 = new java.io.File(dir, f"${2}%020d")
+    assert(Pipeline.parseEntry(entry2.getName,
+      java.nio.file.Files.readString(entry2.toPath)) ==
+      Pipeline.Publish(2L, Seq(s"$root/stage/w$w"), Seq(s"$root/meta/w$w")))
+    assert(dirNames(dir.toString).sorted == Seq(f"${1}%020d", f"${2}%020d"),
+      "no temp entry may outlive its writer")
   }
 
-  test("commit lock on a NON-file scheme: the Hadoop-create branch " +
-    "locks, heartbeats, conflicts, and breaks stale locks over a " +
-    "mockfs:// root — the hdfs:// wire without a cluster") {
+  test("version log: an expire entry landing between an admission's " +
+    "observe and its commit does not fail the admission") {
+    val root = java.nio.file.Files.createTempDirectory("graft_logX")
+      .toString
+    def publish(log: Pipeline.WapLog, v: Long, paths: Seq[String]) =
+      Pipeline.commit(spark, root, log, "setup")(
+        _ => Pipeline.Publish(v, paths, Nil))
+    val v1 = publish(wapLog(root), 1L, Seq(s"$root/data/a"))
+    val observed = publish(v1, 2L, Seq(s"$root/data/a", s"$root/data/b"))
+    // the vacuum commits first: keepLast = 1 expires v1
+    val vacuumed = Pipeline.commit(spark, root, wapLog(root), "vacuum")(
+      Pipeline.expiryFor(1, updatePolicy = false))
+    assert(vacuumed.expired == Set(1L))
+    // the admission re-stamps v2 (the tip, never expired): its entry
+    // moves past the expire entry and lands as v3
+    val after = Pipeline.commit(spark, root, observed, "admitShard",
+      restamps = Set(2L))(_ => Pipeline.Publish(3L,
+        Seq(s"$root/data/a", s"$root/data/b", s"$root/stage/c"), Nil))
+    assert(after.lastSeq == 4L && after.tip.contains(3L))
+    assert(wapLog(root) == after)
+    assert(after.expired == Set(1L) && after.keepLast.contains(1))
+  }
+
+  test("version log: an expire of a rollback's target fails the " +
+    "rollback in both orderings; a rollback that lands first makes " +
+    "the vacuum re-decide") {
+    def fresh(): (String, Pipeline.WapLog) = {
+      val root = java.nio.file.Files.createTempDirectory("graft_logR")
+        .toString
+      val v1 = Pipeline.commit(spark, root, wapLog(root), "setup")(
+        _ => Pipeline.Publish(1L, Seq(s"$root/data/a"), Nil))
+      (root, Pipeline.commit(spark, root, v1, "setup")(
+        _ => Pipeline.Publish(2L, Seq(s"$root/data/b"), Nil)))
+    }
+    def rollback(root: String, observed: Pipeline.WapLog) =
+      Pipeline.commit(spark, root, observed, "rollbackTo",
+        restamps = Set(1L))(_ => Pipeline.Publish(3L, Seq(s"$root/data/a"),
+          Nil))
+    def vacuum(root: String, observed: Pipeline.WapLog) =
+      Pipeline.commit(spark, root, observed, "vacuum")(
+        Pipeline.expiryFor(1, updatePolicy = false))
+    // the expire lands between the rollback's observe and its commit
+    locally {
+      val (root, observed) = fresh()
+      vacuum(root, observed)
+      val e = intercept[IllegalArgumentException](rollback(root, observed))
+      assert(e.getMessage.contains("commit conflict") &&
+        e.getMessage.contains("expired"), e.getMessage)
+      assert(wapLog(root).tip.contains(2L))
+    }
+    // the expire lands before the rollback observes
+    locally {
+      val (root, observed) = fresh()
+      val e = intercept[IllegalArgumentException](
+        rollback(root, vacuum(root, observed)))
+      assert(e.getMessage.contains("expired"), e.getMessage)
+      assert(wapLog(root).tip.contains(2L))
+    }
+    // the rollback lands between the vacuum's observe and its commit:
+    // the vacuum re-decides on the newer log, and the target's dir is
+    // live again through v3
+    locally {
+      val (root, observed) = fresh()
+      rollback(root, observed)
+      val log = vacuum(root, observed)
+      assert(log.lastSeq == 4L && log.expired == Set(1L, 2L))
+      assert(log.paths(3L) == Seq(s"$root/data/a"))
+    }
+  }
+
+  test("version log over mockfs: rename-branch commits and the WAP " +
+    "lifecycle") {
     import org.apache.spark.sql.functions._
     spark.sparkContext.hadoopConfiguration
       .set("fs.mockfs.impl", classOf[MockSchemeFs].getName)
     val local = java.nio.file.Files.createTempDirectory("graft_mockfs")
       .toString
     val root = s"mockfs:$local"
-    // full publish over the scheme-qualified root: manifest parquet,
-    // index/stats, and the LOCK all dispatch through MockSchemeFs
+    val renames = MockSchemeFs.logRenames.get()
+    // full publish over the scheme-qualified root: data and meta
+    // parquet and the log entry all dispatch through MockSchemeFs, and
+    // the entry is published by rename, not by the local hard link
     Pipeline.pipe15PublishV1(spark, sf, root)
-    assert(spark.read.parquet(s"$root/manifest").count() == 1)
-    assert(!new java.io.File(s"$local/manifest.commit.lock").exists(),
-      "the remote-branch lock must be released")
-    // double-publish → the locked no-manifest validation conflicts
+    assert(wapLog(root).tip.contains(1L))
+    assert(MockSchemeFs.logRenames.get() == renames + 1)
+    // the rename branch refuses a taken name: a second first publish
+    // committed from the same (empty) observed log conflicts
     val e = intercept[IllegalArgumentException] {
-      Pipeline.pipe15PublishV1(spark, sf, root)
+      Pipeline.commit(spark, root, Pipeline.WapLog(Nil), "second")(
+        _ => Pipeline.Publish(1L, Seq(s"$root/data/other"), Nil))
     }
-    assert(e.getMessage.contains("already holds a manifest") ||
-      e.getMessage.contains("commit conflict"), e.getMessage)
-    // an admission commits over the same wire (tip validation reads
-    // the manifest through the scheme too)
+    assert(e.getMessage.contains("commit conflict"), e.getMessage)
+    assert(wapLog(root).lastSeq == 1L)
+    // an admission and a compaction commit over the same wire
     val r = Pipeline.admitShard(spark,
       Tables.load(spark, sf, "documents").filter(col("doc_id") % 5 === 4),
       root, closeLoop = true).collect()
       .map(x => x.getString(0) -> x.getAs[Boolean]("pass")).toMap
     assert(r("published_version"))
-    // stale-break through the Hadoop branch: plant a dead lock with
-    // an ancient mtime, the next commit must break it and land
-    val lockFile = new java.io.File(s"$local/manifest.commit.lock")
-    assert(lockFile.createNewFile())
-    assert(lockFile.setLastModified(
-      System.currentTimeMillis() - Pipeline.LockStaleMs - 60000))
     Pipeline.compactVersion(spark, root, 2L).collect()
-    assert(!lockFile.exists())
-    assert(spark.read.parquet(s"$root/manifest")
-      .agg(max(col("version"))).head.getLong(0) == 3L)
+    assert(wapLog(root).tip.contains(3L))
     // the lifecycle GC must DELETE through the scheme too: deleteTree
-    // on a scheme-qualified path dispatches to the Hadoop FS (a nio
-    // walk throws and the old catch-all made it a silent no-op —
-    // expiry reporting dirs dropped that still existed)
-    val stageName = spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === 2L).select("path").distinct()
-      .collect().map(_.getString(0)).filter(_.contains("v2_admitted"))
-      .head.split('/').last
+    // on a scheme-qualified path dispatches to the Hadoop FS
+    val stageName = pathLike(root, 2L, "v2_admitted").split('/').last
+    val v1Name = v1Dir(root).split('/').last
     val stageLocal = new java.io.File(s"$local/stage/$stageName")
     assert(stageLocal.exists())
     // keepLast = 1 keeps only the compacted tip, which references
     // ONLY its own rewrite dir — so BOTH the v1 landing dir and the
-    // staging dir are legitimately unreferenced and drop (no
-    // rollback pins data/v1 live on this root, unlike pipe20's)
+    // staging dir are legitimately unreferenced and drop
     val exp = Pipeline.expireVersions(spark, root, keepLast = 1)
       .collect().map(r => r.getLong(0) ->
         ((r.getBoolean(1), r.getLong(2)))).toMap
     assert(exp(1L)._2 == 1L && exp(2L)._2 == 2L, exp.toString)
     assert(!stageLocal.exists() &&
-      !new java.io.File(s"$local/data/v1").exists(),
+      !new java.io.File(s"$local/data/$v1Name").exists(),
       "the scheme-qualified expiry deletes must reach the disk")
-    // and the live tip still resolves through the scheme
-    assert(spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === 3L).select("path").distinct()
-      .collect().map(r => spark.read.parquet(r.getString(0)))
-      .reduce(_ unionByName _).count() > 0)
+    assert(countOf(root, 3L) > 0)
     // orphan sweep over the same wire
     spark.range(5).toDF("doc_id")
       .write.parquet(s"$root/stage/v9_admitted_feedface0000")
@@ -812,6 +820,65 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(sw("orphan_dirs_dropped") == 1L, sw.toString)
     assert(!new java.io.File(s"$local/stage/v9_admitted_feedface0000")
       .exists())
+  }
+
+  test("version log: a delete that does not happen fails the expiry " +
+    "instead of counting the dir as dropped") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.nodelfs.impl", classOf[NoDeleteFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("graft_nodel")
+      .toString
+    val root = s"nodelfs:$local"
+    for (d <- Seq("a", "b"))
+      assert(new java.io.File(s"$local/data/$d").mkdirs())
+    val v1 = Pipeline.commit(spark, root, wapLog(root), "setup")(
+      _ => Pipeline.Publish(1L, Seq(s"$root/data/a"), Nil))
+    Pipeline.commit(spark, root, v1, "setup")(
+      _ => Pipeline.Publish(2L, Seq(s"$root/data/b"), Nil))
+    val e = intercept[java.io.IOException] {
+      Pipeline.expireVersions(spark, root, keepLast = 1).collect()
+    }
+    assert(e.getMessage.contains("could not delete"), e.getMessage)
+    assert(new java.io.File(s"$local/data/a").exists())
+    // the tombstone is durable before the delete: a replay retries it
+    assert(wapLog(root).expired == Set(1L))
+  }
+
+  test("pipe15: two racing first publishes leave one v1 — the winner's") {
+    import org.apache.spark.sql.functions._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val root = java.nio.file.Files.createTempDirectory("graft_p15r")
+      .toString
+    val docs = Tables.load(spark, sf, "documents")
+    val winner = docs.filter(col("doc_id") % 5 =!= 4)
+    val parked = new CountDownLatch(1)
+    val go = new CountDownLatch(1)
+    // the loser passes the unpublished guard, then parks before it
+    // lands its (different) base
+    val loser = Future {
+      Pipeline.publishBaseV1(spark, docs.filter(col("doc_id") % 2 === 0),
+        root, beforeStage = () => {
+          parked.countDown(); go.await(120, TimeUnit.SECONDS); ()
+        })
+    }
+    assert(parked.await(120, TimeUnit.SECONDS))
+    Pipeline.publishBaseV1(spark, winner, root)
+    val v1 = v1Dir(root)
+    go.countDown()
+    val e = intercept[IllegalArgumentException] {
+      Await.result(loser, 300.seconds)
+    }
+    assert(e.getMessage.contains("commit conflict"), e.getMessage)
+    val log = wapLog(root)
+    assert(log.lastSeq == 1L && log.paths(1L) == Seq(v1))
+    assert(countOf(root, 1L) == winner.count())
+    // the loser landed beside the winner, never over it, and removed
+    // its own landing and meta dirs on the conflict
+    assert(dirNames(s"$root/data") == Seq(v1.split('/').last))
+    assert(dirNames(s"$root/meta").size == 1)
   }
 
   test("pipe20: snapshot expiration drops ONLY dirs unreferenced by " +
@@ -829,6 +896,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     Pipeline.rollbackTo(spark, root, targetV = 1L, toV = 4L)
     val stageDir = pathLike(root, 2L, "v2_admitted")
     val compactDir = pathLike(root, 3L, "v3_compact")
+    val v1 = v1Dir(root)
     // retention wider than history: everything live, nothing dropped
     val r0 = Pipeline.expireVersions(spark, root, keepLast = 9)
       .collect()
@@ -836,7 +904,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(r0.forall(_.getAs[Long]("n_dirs_dropped") == 0L))
     assert(new java.io.File(stageDir).exists())
     // narrowing retention 9 → 2 is a DELIBERATE policy change: the
-    // first vacuum pinned keepLast=9 in the root's retention file,
+    // first vacuum pinned keepLast=9 in its expire entry,
     // so without the explicit override the narrower vacuum must fail
     // loud instead of silently racing a recorded wider policy
     val conflict = intercept[IllegalArgumentException] {
@@ -847,7 +915,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(new java.io.File(stageDir).exists(),
       "a refused vacuum must not have deleted anything")
     // the real vacuum: keep {3, 4}; v2's staging dir is the only dir
-    // no live version references — data/v1 is shared with v4 (the
+    // no live version references — v1's landing dir is shared with v4 (the
     // rollback re-stamp) and MUST survive
     def run() = Pipeline.expireVersions(spark, root, keepLast = 2,
         updatePolicy = true)
@@ -869,14 +937,13 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (4L, true, 0L, base.count())), r1.toString)
     assert(!new java.io.File(stageDir).exists(),
       "the expired-only staging dir must be deleted")
-    assert(new java.io.File(s"$root/data/v1").exists(),
+    assert(new java.io.File(v1).exists(),
       "a dir shared with a live version must survive the vacuum")
     assert(new java.io.File(compactDir).exists())
-    assert(spark.read.parquet(s"$root/expired").collect()
-      .map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(wapLog(root).expired == Set(1L, 2L))
     // replay: same report, still nothing else deleted
     assert(run() == r1, "expiry replay must be idempotent")
-    assert(new java.io.File(s"$root/data/v1").exists())
+    assert(new java.io.File(v1).exists())
     // the tip can never expire
     intercept[IllegalArgumentException] {
       Pipeline.expireVersions(spark, root, keepLast = 0)
@@ -890,8 +957,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(r3 == Map(1L -> false, 2L -> false, 3L -> true, 4L -> true),
       s"widened retention resurrected an expired version: $r3")
-    assert(spark.read.parquet(s"$root/expired").collect()
-      .map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(wapLog(root).expired == Set(1L, 2L))
     // an expired version can never come back as the tip: re-stamping
     // v2's paths would publish a version pointing at the vacuumed
     // staging dir
@@ -925,7 +991,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .map(_.filter(_.getName.endsWith(".parquet"))
           .map(f => f.getName -> ((f.length(), f.lastModified())))
           .toMap).getOrElse(Map.empty)
-    val refDirs = Seq(s"$root/data/v1",
+    val refDirs = Seq(v1Dir(root),
       pathLike(root, 2L, "v2_admitted"), pathLike(root, 3L, "v3_compact"))
     val before = refDirs.map(d => d -> files(d)).toMap
     def report(graceMs: Long): Map[String, Long] =
@@ -945,7 +1011,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     for (d <- refDirs) assert(files(d) == before(d),
       s"sweep touched referenced dir $d")
     // meta relations live outside the swept namespaces
-    for (m <- Seq("manifest", "index/fp", "stats/totals"))
+    for (m <- Seq("manifest/_log", "meta"))
       assert(new java.io.File(s"$root/$m").exists(), m)
     // the tip still resolves to the admitted corpus
     val fp = md5(lower(regexp_replace(col("text"), "\\s+", " ")))
@@ -1060,13 +1126,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(reports(1)("rejected_dup") == reports(0)("admitted_new") +
       reports(0)("rejected_dup"))
     // final content is EXACTLY the clean run's: base + new shard fps
-    val manifest = spark.read.parquet(s"$root/manifest")
-    val tip = manifest.agg(max(col("version"))).head.getLong(0)
-    assert(tip == 4L, "v2 admission, v3 empty redelivery, v4 second shard")
-    def countOf(v: Long): Long =
-      manifest.filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0))
-        .map(spark.read.parquet(_)).reduce(_ unionByName _).count()
+    assert(wapLog(root).tip.contains(4L),
+      "v2 admission, v3 empty redelivery, v4 second shard")
     val docs = Tables.load(spark, sf, "documents")
     val fp = md5(lower(regexp_replace(col("text"), "\\s+", " ")))
     val hasText = col("text").isNotNull && length(col("text")) > 0
@@ -1076,14 +1137,14 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .join(base.filter(hasText).select(fp.as("fp")).distinct(),
         Seq("fp"), "left_anti").count()
     val shNulls = sh.filter(!hasText).count()
-    assert(countOf(4L) == base.count() + newFp + shNulls,
+    assert(countOf(root, 4L) == base.count() + newFp + shNulls,
       "crash + redelivery must not change the final corpus")
-    assert(countOf(3L) == countOf(2L),
+    assert(countOf(root, 3L) == countOf(root, 2L),
       "the redelivered publish must be an empty delta")
   }
 
   test("WAP commit conflict: compaction RACED against admission on " +
-    "one root — exactly one manifest append wins, the loser errors " +
+    "one root — exactly one log entry wins, the loser errors " +
     "with its staged files unreferenced, and a retry succeeds " +
     "against the new tip", SlowTests) {
     import org.apache.spark.sql.functions._
@@ -1103,15 +1164,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         root, closeLoop = true).collect()
       root // tip = 2
     }
-    def manifest(root: String) = spark.read.parquet(s"$root/manifest")
-    def tipOf(root: String): Long =
-      manifest(root).agg(max(col("version"))).head.getLong(0)
-    def resolve(root: String, v: Long): Seq[String] =
-      manifest(root).filter(col("version") === v).select("path")
-        .distinct().collect().map(_.getString(0)).sorted.toSeq
-    def countOf(root: String, v: Long): Long =
-      resolve(root, v).map(spark.read.parquet(_))
-        .reduce(_ unionByName _).count()
+    def tipOf(root: String): Long = wapLog(root).tip.get
+    def resolve(root: String, v: Long): Seq[String] = wapLog(root).paths(v)
+    def referenced(root: String): Seq[String] =
+      wapLog(root).publishes.flatMap(_.data)
 
     // ORDERING 1: the admission stages first, parks before its
     // commit; the compaction publishes v3 meanwhile → the admission
@@ -1137,8 +1193,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       // winner-only state: tip is the compaction's v3, untouched by
       // the loser, and the loser's staged shard is unreferenced
       assert(tipOf(root) == 3L && resolve(root, 3L) == v3)
-      assert(!manifest(root).select("path").collect()
-        .map(_.getString(0)).exists(_.contains("v3_admitted")))
+      assert(!referenced(root).exists(_.contains("v3_admitted")))
       // …and physically DELETED (its nonce-unique dir is provably its
       // own, so the conflict handler sweeps it — no orphan shards)
       assert(!dirNames(s"$root/stage").exists(_.contains("v3_admitted")),
@@ -1181,10 +1236,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(e.getMessage.contains("commit conflict"), e.getMessage)
       assert(tipOf(root) == 3L && resolve(root, 3L) == v3)
       assert(v3.exists(_.contains("v3_admitted")))
-      // the losing rewrite leaves no orphan and no manifest trace
+      // the losing rewrite leaves no orphan and no log trace
       assert(!dirNames(s"$root/data").exists(_.startsWith("v3_compact")))
-      assert(!manifest(root).select("path").collect()
-        .map(_.getString(0)).exists(_.contains("v3_compact")))
+      assert(!referenced(root).exists(_.contains("v3_compact")))
       // the loser re-stages against the new tip and succeeds (v4 is
       // the compaction of the admission's v3 — content preserved)
       Pipeline.compactVersion(spark, root, 3L).collect()
@@ -1263,15 +1317,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         root, closeLoop = true).collect()
       root // tip = 2
     }
-    def manifest(root: String) = spark.read.parquet(s"$root/manifest")
-    def tipOf(root: String): Long =
-      manifest(root).agg(max(col("version"))).head.getLong(0)
-    def resolve(root: String, v: Long): Seq[String] =
-      manifest(root).filter(col("version") === v).select("path")
-        .distinct().collect().map(_.getString(0)).sorted.toSeq
-    def countOf(root: String, v: Long): Long =
-      resolve(root, v).map(spark.read.parquet(_))
-        .reduce(_ unionByName _).count()
+    def tipOf(root: String): Long = wapLog(root).tip.get
+    def resolve(root: String, v: Long): Seq[String] = wapLog(root).paths(v)
+    def referenced(root: String): Seq[String] =
+      wapLog(root).publishes.flatMap(_.data)
     // byte-level snapshot of a published version's every file —
     // (name, length, mtime) per dir — the "untouched" witness
     def filesOf(dirs: Seq[String]): Map[String, Map[String, (Long, Long)]] =
@@ -1333,7 +1382,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // v3; the loser rewrites into its OWN dir, conflicts, and deletes
     // only what it wrote. With a shared deterministic dir the loser
     // would have overwritten the winner's published rewrite and then
-    // deleteTree'd it — the manifest's v3 pointing at nothing.
+    // deleted it — the log's v3 pointing at nothing.
     locally {
       val root = freshRoot()
       val parked = new CountDownLatch(1)
@@ -1354,7 +1403,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         Await.result(loser, 300.seconds)
       }
       assert(e.getMessage.contains("commit conflict"), e.getMessage)
-      // the manifest's v3 still RESOLVES (the loser never deleted the
+      // the log's v3 still RESOLVES (the loser never deleted the
       // winner's dir), content preserved, byte-identical
       assert(tipOf(root) == 3L && resolve(root, 3L) == v3)
       assert(filesOf(v3) == v3Files,
@@ -1366,8 +1415,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
 
     // INTERLEAVING C: rollback RACED against admission, both
-    // orderings — the third writer kind goes through the same locked
-    // commit point and must lose cleanly too.
+    // orderings — the third writer kind goes through the same
+    // commit and must lose cleanly too.
     locally { // C1: rollback parks, admission wins
       val root = freshRoot()
       val parked = new CountDownLatch(1)
@@ -1427,11 +1476,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
     // INTERLEAVING D: rollback RACED against the vacuum — the
     // rollback observes its target live, parks before its commit; a
-    // concurrent expire (which tombstones UNDER the commit lock)
-    // expires the target. The manifest tip never moves, so the tip
-    // validation alone would pass and publish a version pointing at
-    // a vacuumable snapshot — the rollback's locked tombstone
-    // re-check must refuse instead.
+    // concurrent expire commits its entry first and expires the
+    // target. The tip never moves, so a tip check alone would pass
+    // and publish a version pointing at a vacuumable snapshot — the
+    // rollback's commit must find the expire entry and refuse.
     locally {
       val root = freshRoot() // tip = 2
       val parked = new CountDownLatch(1)
@@ -1499,8 +1547,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val root = java.nio.file.Files.createTempDirectory("graft_p19c")
       .toString
     Pipeline.publishV1Meta(spark, s"$in/base", root)
-    def tipOf(): Long = spark.read.parquet(s"$root/manifest")
-      .agg(max(col("version"))).head.getLong(0)
+    def tipOf(): Long = wapLog(root).tip.get
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "2")
     @volatile var compactedAt = -1L
@@ -1527,9 +1574,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     try assert(q.awaitTermination(300000)) finally q.stop()
     // v1 publish, v2 first shard, v3 compaction, v4 second shard
     assert(compactedAt == 2L && tipOf() == 4L)
-    val v4 = spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === 4L).select("path").distinct()
-      .collect().map(_.getString(0))
+    val v4 = wapLog(root).paths(4L)
     assert(v4.exists(_.contains("v3_compact")), "the admitted tip must " +
       "reference the compacted files, not the fragmented originals")
     assert(v4.exists(_.contains("v4_admitted")))
@@ -1604,15 +1649,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       try assert(q.awaitTermination(300000)) finally q.stop()
       assert(reports.length == order.length,
         s"one micro-batch per arriving file: ${reports.length}")
-      val tip = spark.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
+      val tip = wapLog(root).tip.get
       (tip, reports.map(_("admitted_new")).sum,
-        reports.map(_("rejected_dup")).sum,
-        spark.read.parquet(s"$root/manifest")
-          .filter(col("version") === tip).select("path").distinct()
-          .collect().map(_.getString(0))
-          .map(spark.read.parquet(_)).reduce(_ unionByName _).count(),
-        root)
+        reports.map(_("rejected_dup")).sum, countOf(root, tip), root)
     }
     // batch oracle (order-free restatement): total admitted = the
     // distinct shard fingerprints not already published in the base;
@@ -1631,9 +1670,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(nFinal == base.count() + expAdmit)
       // the final corpus's fingerprint SET equals base ∪ shards —
       // content equality, not just counts
-      val finalFps = spark.read.parquet(s"$root/manifest")
-        .filter(col("version") === tip).select("path").distinct()
-        .collect().map(_.getString(0))
+      val finalFps = wapLog(root).paths(tip)
         .map(spark.read.parquet(_)).reduce(_ unionByName _)
         .filter(hasText).select(fp.as("f")).distinct()
       val wantFps = base.filter(hasText).unionByName(allSh)

@@ -1,17 +1,23 @@
 package graft
 
-/** Tag for tests whose wall time dominates the suite (the sf1 scale
-  * gate, the WAP race/fuzz batteries). The default `sbt test` EXCLUDES
-  * them so the suite finishes inside the driver's budget
+/** Tag for tests whose wall time dominates the suite. The default
+  * `sbt test` EXCLUDES them so the suite finishes inside its budget
   * (VERIFY_r16 `tests_ok: false`: the sbt-test JVM was killed
   * mid-suite at ~18k Spark stages — a gate that never finishes
   * verifies nothing). Run the FULL battery with:
   *
   *   SPARK_GRAFT_FULL_TESTS=1 sbt test
   *
-  * (build.sbt reads the env var and drops the exclusion). The round
-  * ledger records a full-battery run per round; the default suite
-  * keeps every correctness/contract spec — only the multi-minute
-  * scale/fuzz batteries move behind the tag.
+  * (build.sbt reads the env var and drops the exclusion). The tag
+  * holds scale and fuzz batteries — the sf1 scale gate, the WAP
+  * free-running fuzz, both WAP commit-conflict batteries and the
+  * pipe19 interleavings — and also these correctness/contract specs,
+  * which the default suite therefore does NOT run:
+  *  - EmptySweepSpec: every registered query on empty tables, and on
+  *    single-row tables;
+  *  - PlanAuditSpec: the BNL/cartesian physical-plan audit;
+  *  - ChangeFeedSourceSpec: the DSv2 change-schema/types test;
+  *  - TextAnalysisSpec: t24 DSIR layout invariance.
+  * A change that touches what those specs cover needs the full run.
   */
 object SlowTests extends org.scalatest.Tag("graft.Slow")
