@@ -170,6 +170,19 @@ object Bench {
       .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
   }
 
+  /** A JSON object of string values; exception messages carry quotes,
+    * backslashes and newlines, so both sides are escaped.
+    */
+  private[graft] def jsonObject(kv: Iterable[(String, String)]): String = {
+    def str(v: String): String = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    kv.map { case (k, v) => str(k) + ":" + str(v) }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -182,15 +195,27 @@ object Bench {
     // noise that the capture window clipped the tail — the one output
     // line that matters must not compete with log volume
     spark.sparkContext.setLogLevel("ERROR")
+    // a failed warmup does not stop the run, but it is never silent:
+    // it goes to stderr as it happens and into the artifact's
+    // "warmup_failures" (what failed -> exception class and message)
+    val warmupFailures =
+      scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def warm(what: String)(body: => Unit): Unit =
+      try body catch {
+        case scala.util.control.NonFatal(e) =>
+          val why = s"${e.getClass.getName}: ${e.getMessage}"
+          System.err.println(s"[bench] warmup $what failed: $why")
+          warmupFailures(what) = why
+      }
     // untimed warmup: JIT/codegen/first-scan costs otherwise land on
     // whichever query happens to run first, distorting its number
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    warm("entry")(SparkEntry.entry(spark).count())
     // untimed first scan of the BENCH scale's own data: entry() warms
     // sf0.001, but the first sf0.1 parquet scan (footer reads, codec
     // init, page-cache fill) otherwise lands on whichever timed query
     // touches lineitem first — j1 absorbed 2.4 s of it in round 7
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => () }
+    warm("lineitem_scan")(
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count())
     // memoized-relation steady state: the dedup/similarity/text
     // families share PERSISTED relations (shingle index, IVF cells,
     // PQ artifacts, truth top-k, ...), so whichever query a run
@@ -203,12 +228,12 @@ object Bench {
     // drift. Touching SparkEntry.queries first forces init of every
     // query module, which is what registers the warmers.
     require(SparkEntry.queries.nonEmpty) // force module init
-    for ((_, fn) <- graft.functions.Memo.memoWarmers.toSeq.sortBy(_._1))
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    for ((memo, fn) <- graft.functions.Memo.memoWarmers.toSeq.sortBy(_._1))
+      warm(s"memo:$memo")(fn(spark, sfDir).count())
     // residual non-memo one-time costs (codegen, expression registry)
     for (q <- Bench.WarmupQueries)
       SparkEntry.queries.get(q).foreach(fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () })
+        warm(q)(fn(spark, sfDir).count()))
     // host-speed denominator, first point: the timed window's start
     // (interior and end points fire below); -1.0 = point failed, never 0
     val probePoints = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -326,6 +351,7 @@ object Bench {
     val (fixedSec, fixedSpread) = medianAndSpread(fixedPoints.toSeq)
     val fileLine =
       line.dropRight(1) + s""","gc_sec":$gcJson,"rows":$rowsJson""" +
+        s""","warmup_failures":${jsonObject(warmupFailures)}""" +
         s""","calibration":{"probe_sec":${f(probeSec)}""" +
         s""","samples":[${probePoints.map(f).mkString(",")}]""" +
         s""","spread":${f(spread)}""" +

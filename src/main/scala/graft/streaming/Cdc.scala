@@ -89,10 +89,11 @@ object Cdc {
     * Arg-max as max(struct(scn, seq, ...)): (scn, seq) is the total
     * log order, and replayed records are bit-identical, so the max is
     * well-defined under re-delivery — no (key,scn) dedup pass needed.
-    * One partial-aggregable aggregate: no sort, no window, map-side
-    * combine at 100 TB. (A row_number window would full-sort each
-    * key's history and also trips Spark's exceptAll attribute-binding
-    * bug when layered under set ops.)
+    * One partial-aggregable aggregate, no window, map-side combine at
+    * 100 TB. It plans as a `SortAggregate` behind a per-partition sort
+    * (a struct buffer is not hash-aggregable). (A row_number window
+    * would full-sort each key's history and also trips Spark's
+    * exceptAll attribute-binding bug when layered under set ops.)
     */
   def lastChange(changes: DataFrame): DataFrame =
     changes
@@ -874,11 +875,15 @@ object Cdc {
     s"REPLACE INTO $table (k, scn, seq, v) VALUES " +
       Seq.fill(rows)("(?, ?, ?, ?)").mkString(", ")
 
-  /** Embedded (in-process) JDBC targets run one lock manager inside
-    * this JVM: concurrent writers buy no parallelism there and can
-    * escalate row locks to table locks under load, so clamp those to a
-    * single writer. A server-grade URL (`jdbc:derby://host`, or any
-    * non-Derby target) keeps the full [[JdbcConnections]] fan-out.
+  /** How many connections the sink writes over — and so how many
+    * partitions [[sinkPartitioned]] splits a window into. Embedded
+    * (in-process) JDBC targets run one lock manager inside this JVM:
+    * concurrent writers buy no parallelism there and can escalate row
+    * locks to table locks under load, so those get a single writer,
+    * and a window is reduced and applied in one job of one task. A
+    * server-grade URL (`jdbc:derby://host`, or any non-Derby target)
+    * gets the full [[JdbcConnections]] fan-out: one hash partition per
+    * connection.
     */
   private[graft] def sinkConnections(url: String): Int = {
     // the ReplaceShim prefix is transport, not a target: the clamp
@@ -1065,10 +1070,29 @@ object Cdc {
     flushes
   }
 
+  /** The sink's one partitioning decision: a change window split by
+    * key into exactly [[sinkConnections]] partitions, each reduced with
+    * [[lastChange]] — one partition per connection, every key in
+    * exactly one of them. A single-writer target takes a narrow
+    * `coalesce(1)`: all keys are trivially co-located, the aggregate
+    * plans no Exchange, and the window is reduced and written by one
+    * job of one task (`repartition(1, keys)` would still shuffle). An
+    * n-connection target takes one hash exchange on (table_name, key)
+    * into n partitions, which the aggregate reuses as its own
+    * distribution.
+    */
+  private[graft] def sinkPartitioned(batch: DataFrame,
+      url: String): DataFrame = {
+    val n = sinkConnections(url)
+    lastChange(
+      if (n == 1) batch.coalesce(1)
+      else batch.repartition(n, col("table_name"), col("key")))
+  }
+
   def applyBatchJdbc(batch: DataFrame, url: String, table: String,
       dialect: SinkDialect = null,
       rowsPerStmt: Int = ReplaceRowsPerStmt): Unit =
-    lastChange(batch).coalesce(sinkConnections(url)).foreachPartition {
+    sinkPartitioned(batch, url).foreachPartition {
       (rows: Iterator[org.apache.spark.sql.Row]) =>
         applyPartition(rows, url, table, dialect = dialect,
           rowsPerStmt = rowsPerStmt): Unit

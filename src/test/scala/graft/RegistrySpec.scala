@@ -47,6 +47,17 @@ class RegistrySpec extends AnyFunSuite {
     assert(missing.isEmpty, s"warmup names not in registry: $missing")
   }
 
+  test("bench warmup failures render as a parseable JSON object") {
+    val failures = Seq(
+      "memo:dedup.docsFeed" -> "java.io.IOException: no \"docs\" at C:\\x",
+      "q1" -> "org.apache.spark.SparkException: line one\n\tline two")
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Bench.jsonObject(failures))
+    assert(parsed.size == 2)
+    failures.foreach { case (k, v) => assert(parsed.get(k).asText == v) }
+    assert(Bench.jsonObject(Nil) == "{}")
+  }
+
   test("memo warmer registry holds every memoized shared relation") {
     // Bench warms graft.functions.Memo.memoWarmers by iterating the
     // registry (drift-proof by construction); this pins that module
