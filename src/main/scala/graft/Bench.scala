@@ -170,13 +170,18 @@ object Bench {
       .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
   }
 
-  /** A JSON object of string values; exception messages carry quotes,
-    * backslashes and newlines, so both sides are escaped.
+  /** A JSON object of string values, both sides escaped: backslash,
+    * quote and ALL control chars (< 0x20). Exception messages and
+    * hand-written oracle SQL carry newlines and tabs, and one raw
+    * control char would make the whole artifact fail to parse.
     */
   private[graft] def jsonObject(kv: Iterable[(String, String)]): String = {
     def str(v: String): String = "\"" + v.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
@@ -200,9 +205,11 @@ object Bench {
     // "warmup_failures" (what failed -> exception class and message)
     val warmupFailures =
       scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // (a LinkageError — a query module whose initializer threw — is
+    // recorded too; only VM errors and interrupts end the run)
     def warm(what: String)(body: => Unit): Unit =
       try body catch {
-        case scala.util.control.NonFatal(e) =>
+        case e @ (scala.util.control.NonFatal(_) | _: LinkageError) =>
           val why = s"${e.getClass.getName}: ${e.getMessage}"
           System.err.println(s"[bench] warmup $what failed: $why")
           warmupFailures(what) = why

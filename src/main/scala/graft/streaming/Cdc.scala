@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -89,11 +90,13 @@ object Cdc {
     * Arg-max as max(struct(scn, seq, ...)): (scn, seq) is the total
     * log order, and replayed records are bit-identical, so the max is
     * well-defined under re-delivery — no (key,scn) dedup pass needed.
-    * One partial-aggregable aggregate, no window, map-side combine at
-    * 100 TB. It plans as a `SortAggregate` behind a per-partition sort
-    * (a struct buffer is not hash-aggregable). (A row_number window
-    * would full-sort each key's history and also trips Spark's
-    * exceptAll attribute-binding bug when layered under set ops.)
+    * One partial-aggregable aggregate, no window: the map side
+    * combines each key's history before the shuffle, so shuffle volume
+    * follows the keyspace, not the log. It plans as a `SortAggregate`
+    * behind a per-partition sort (a struct buffer is not
+    * hash-aggregable). (A row_number window would full-sort each
+    * key's history and also trips Spark's exceptAll attribute-binding
+    * bug when layered under set ops.)
     */
   def lastChange(changes: DataFrame): DataFrame =
     changes
@@ -875,15 +878,15 @@ object Cdc {
     s"REPLACE INTO $table (k, scn, seq, v) VALUES " +
       Seq.fill(rows)("(?, ?, ?, ?)").mkString(", ")
 
-  /** How many connections the sink writes over — and so how many
-    * partitions [[sinkPartitioned]] splits a window into. Embedded
+  /** How many connections the sink writes over — and so the most
+    * partitions [[sinkPartitioned]] hands it per window. Embedded
     * (in-process) JDBC targets run one lock manager inside this JVM:
     * concurrent writers buy no parallelism there and can escalate row
-    * locks to table locks under load, so those get a single writer,
-    * and a window is reduced and applied in one job of one task. A
-    * server-grade URL (`jdbc:derby://host`, or any non-Derby target)
-    * gets the full [[JdbcConnections]] fan-out: one hash partition per
-    * connection.
+    * locks to table locks under load, so those get a single writer
+    * (and a driver-held window is reduced and applied in one job of
+    * one task). A server-grade URL (`jdbc:derby://host`, or any
+    * non-Derby target) gets the full [[JdbcConnections]] fan-out: the
+    * reduced keys are coalesced onto one partition per connection.
     */
   private[graft] def sinkConnections(url: String): Int = {
     // the ReplaceShim prefix is transport, not a target: the clamp
@@ -1070,23 +1073,33 @@ object Cdc {
     flushes
   }
 
-  /** The sink's one partitioning decision: a change window split by
-    * key into exactly [[sinkConnections]] partitions, each reduced with
-    * [[lastChange]] — one partition per connection, every key in
-    * exactly one of them. A single-writer target takes a narrow
-    * `coalesce(1)`: all keys are trivially co-located, the aggregate
-    * plans no Exchange, and the window is reduced and written by one
-    * job of one task (`repartition(1, keys)` would still shuffle). An
-    * n-connection target takes one hash exchange on (table_name, key)
-    * into n partitions, which the aggregate reuses as its own
-    * distribution.
+  /** The sink's one partitioning decision: a change window reduced
+    * with [[lastChange]] into at most [[sinkConnections]] partitions —
+    * one partition per connection, every key in exactly one of them.
+    * By default that is the arg-max's own plan (map-side combine, one
+    * hash exchange on (table_name, key)) coalesced onto the sink's
+    * connections.
+    *
+    * A window the driver already holds (every leaf of its plan is a
+    * `LocalRelation`, e.g. `createDataFrame` over a list of fetched
+    * rows) bound for a single-writer target instead takes a narrow
+    * `coalesce(1)` before the arg-max: all keys are trivially
+    * co-located, the aggregate plans no Exchange, and the window is
+    * reduced and written by one job of one task (`repartition(1,
+    * keys)` would still shuffle). A window Spark must still scan keeps
+    * the default: `coalesce(1)` would pull its scan and sort into that
+    * one task too, and a large scanned feed then loses more to the
+    * serial scan than it saves on the shuffle.
     */
   private[graft] def sinkPartitioned(batch: DataFrame,
       url: String): DataFrame = {
     val n = sinkConnections(url)
-    lastChange(
-      if (n == 1) batch.coalesce(1)
-      else batch.repartition(n, col("table_name"), col("key")))
+    // the analyzed plan is already built (a Dataset analyzes eagerly),
+    // so the check costs no optimizer pass per window
+    val driverHeld = batch.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+    if (n == 1 && driverHeld) lastChange(batch.coalesce(1))
+    else lastChange(batch).coalesce(n)
   }
 
   def applyBatchJdbc(batch: DataFrame, url: String, table: String,

@@ -6,9 +6,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
   ShuffleExchangeExec}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.types._
 
@@ -100,16 +102,51 @@ class CdcSinkSpec extends AnyFunSuite with SparkSessionTestWrapper
   private def shuffles(p: SparkPlan) =
     collect(p) { case e: ShuffleExchangeExec => e }
 
-  test("sink partitioning: a single-writer target reduces and writes a " +
-    "window in one job with no shuffle; a server target hash-partitions " +
-    "once by (table_name, key) into JdbcConnections") {
+  /** The arg-max's own plan: one hash exchange on (table_name, key)
+    * with a partial aggregate on its map side, then the reduced keys
+    * coalesced onto `n` partitions — each key in exactly one of them.
+    */
+  private def assertCombinedThenCoalesced(df: DataFrame, n: Int,
+      want: Set[Row]): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val ex = shuffles(plan)
+    assert(ex.size == 1, plan.treeString)
+    assert(ex.head.shuffleOrigin == ENSURE_REQUIREMENTS, plan.treeString)
+    ex.head.outputPartitioning match {
+      case HashPartitioning(exprs, _) =>
+        assert(exprs.map {
+          case a: AttributeReference => a.name
+          case e => e.sql
+        } == Seq("table_name", "key"), plan.treeString)
+      case other => fail(s"not a hash exchange: $other")
+    }
+    assert(collect(ex.head.child) {
+      case a: BaseAggregateExec
+          if a.aggregateExpressions.nonEmpty &&
+            a.aggregateExpressions.forall(_.mode == Partial) => a
+    }.size == 1, plan.treeString)
+    assert(collect(plan) { case c: CoalesceExec => c.numPartitions } ==
+      Seq(n), plan.treeString)
+    assert(df.rdd.getNumPartitions <= n)
+    val keys = df.rdd
+      .mapPartitions(it => Iterator(it.map(_.getLong(1)).toSeq))
+      .collect().flatten
+    assert(keys.length == keys.distinct.length)
+    assert(df.collect().toSet == want)
+  }
+
+  test("sink partitioning: a driver-held window bound for a " +
+    "single-writer target is reduced and written in one job with no " +
+    "shuffle; a scanned window, or a server target, keeps the map-side " +
+    "combine and coalesces onto the sink's connections") {
     val rows: Seq[Change] = (1 to 60).map(i =>
       (i / 3L, i % 3L, if (i % 7 == 0) "DELETE" else "UPDATE",
         i % 17L, if (i % 5 == 0) None else Some(i * 1.0)))
     val batch = window(rows)
     val want = Cdc.lastChange(batch).collect().toSet
 
-    // embedded Derby: one connection, a narrow coalesce, no Exchange
+    // embedded Derby, driver-held window: one connection, a narrow
+    // coalesce, no Exchange
     val url = createTarget("cdc_sink_plan", "P")
     assert(Cdc.sinkConnections(url) == 1)
     val single = Cdc.sinkPartitioned(batch, url)
@@ -123,34 +160,19 @@ class CdcSinkSpec extends AnyFunSuite with SparkSessionTestWrapper
     assert(target(url, "P").size ==
       want.count(_.getAs[String]("op") != "DELETE"))
 
-    // a server URL (planned only, never connected): one hash exchange
-    // on (table_name, key) into JdbcConnections partitions, which the
-    // aggregate reuses — and no coalesce
+    // the same window scanned from parquet, to the same target: the
+    // scan stays parallel, the reduced keys go to the one writer
+    val dir = graft.operators.Migrate.tempDir("cdc_sink_scan") + "/w"
+    batch.write.parquet(dir)
+    assertCombinedThenCoalesced(
+      Cdc.sinkPartitioned(spark.read.parquet(dir), url), 1, want)
+
+    // a server URL (planned only, never connected): the same plan,
+    // coalesced onto JdbcConnections partitions
     val server = "jdbc:mysql://h/db"
     assert(Cdc.sinkConnections(server) == Cdc.JdbcConnections)
-    val fanned = Cdc.sinkPartitioned(batch, server)
-    val plan = fanned.queryExecution.executedPlan
-    val ex = shuffles(plan)
-    assert(ex.size == 1, plan.treeString)
-    assert(ex.head.shuffleOrigin == REPARTITION_BY_NUM, plan.treeString)
-    ex.head.outputPartitioning match {
-      case HashPartitioning(exprs, n) =>
-        assert(n == Cdc.JdbcConnections)
-        assert(exprs.map {
-          case a: AttributeReference => a.name
-          case e => e.sql
-        } == Seq("table_name", "key"), plan.treeString)
-      case other => fail(s"not a hash exchange: $other")
-    }
-    assert(collect(plan) { case c: CoalesceExec => c }.isEmpty,
-      plan.treeString)
-    assert(fanned.rdd.getNumPartitions == Cdc.JdbcConnections)
-    // each key lands in exactly one partition, reduced to one row
-    val perPart = fanned.rdd
-      .mapPartitions(it => Iterator(it.map(_.getLong(1)).toSeq)).collect()
-    val keys = perPart.flatten
-    assert(keys.length == keys.distinct.length)
-    assert(fanned.collect().toSet == want)
+    assertCombinedThenCoalesced(Cdc.sinkPartitioned(batch, server),
+      Cdc.JdbcConnections, want)
   }
 
   test("property: windows applied in SCN order through every sink " +

@@ -649,12 +649,12 @@ class CdcSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .toDF("scn", "seq", "op", "key", "value")
       .withColumn("table_name", lit("t"))
     val reduced = Cdc.lastChange(feed)
-    // connection bound: the sink's own partitioning plans exactly one
+    // connection bound: the sink's own partitioning plans at most one
     // partition per connection — JdbcConnections for a server target,
     // one for an embedded one — regardless of input partitioning
     val spread = feed.repartition(16)
     assert(Cdc.sinkPartitioned(spread, "jdbc:mysql://h/db")
-      .rdd.getNumPartitions == Cdc.JdbcConnections)
+      .rdd.getNumPartitions <= Cdc.JdbcConnections)
     assert(Cdc.sinkPartitioned(spread, "jdbc:derby:/x/db")
       .rdd.getNumPartitions == 1)
     // worst case: every key lands in ONE partition; the flush count
